@@ -19,9 +19,9 @@ dataflow over web-page tables, designed for 10^12-document scale:
   evaluation (reference: code/common.py:73-89)
 
 Everything is DataFrame-first: shingling/signatures run as vectorized
-pandas/Arrow UDFs, candidates resolve through (optionally salted) hash
-joins, and every stage writes a per-partition lineage manifest so the
-pipeline is resumable.
+pandas/Arrow UDFs, candidates resolve through capped grouped hash joins,
+and every stage writes a per-partition lineage manifest so the pipeline
+is resumable.
 """
 
 __version__ = "0.1.0"

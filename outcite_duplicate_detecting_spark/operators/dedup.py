@@ -5,10 +5,6 @@
   (/root/reference/code/blocking/code/make_representations_v3.py:47-49,76).
   Spark's partial/final hash aggregation does the two-phase merge natively;
   no shuffle beyond the one groupBy.
-- ``collapse_exact``: the scale-critical pre-pass — collapse byte-identical
-  texts to one representative before any pairwise detector runs (SURVEY.md
-  §4 "frequency pre-aggregation"). On web data exact dups dominate, so this
-  turns the hottest LSH bands into single rows.
 - ``jaccard_pairs``: exact shingle-Jaccard pair join via the exploded
   inverted index — the relational form of the reference's CSR dot products
   (/root/reference/code/common.py:265-312): explode distinct shingles,
@@ -24,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..functions.partitioning import spread_small_input
 from ..functions.text import word_shingles
+from .joins import grouped_pairs
 
 
 def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -40,32 +37,6 @@ def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
         )
         .where(F.col("freq") > 1)
     )
-
-
-def collapse_exact(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> tuple[DataFrame, DataFrame]:
-    """(representatives, membership).
-
-    representatives: one row per distinct text — (rep_id, text, freq) where
-    rep_id is the minimum member id. membership: (id, rep_id) for every row.
-    Detectors run on representatives only; results expand back via membership.
-    """
-    digest = F.sha2(F.col(text_col), 256).alias("text_sha")
-    keyed = df.select(F.col(id_col).alias("id"), digest, F.col(text_col))
-    reps = (
-        keyed.groupBy("text_sha")
-        .agg(
-            F.min("id").alias("rep_id"),
-            F.first(text_col).alias(text_col),
-            F.count("*").alias("freq"),
-        )
-        .select("rep_id", text_col, "freq", "text_sha")
-    )
-    membership = keyed.join(
-        reps.select("text_sha", "rep_id"), "text_sha"
-    ).select("id", "rep_id")
-    return reps, membership
 
 
 def with_shingles(
@@ -123,18 +94,11 @@ def jaccard_pairs_with_drops(
     table). With no bucket over the cap the output is exactly the uncapped
     all-pairs result.
 
-    Dataflow (r6 single-pass redesign): one shuffle builds the inverted
-    index as grouped posting LISTS — ``groupBy(shingle)`` with
-    ``collect_list`` — which yields bucket size, the cap filter, and the
-    pair generator from ONE aggregation instead of the former
-    checkpoint + two bucket-size aggregations + self-join (3 exchanges,
-    4 scans of the exploded table). Pairs are generated inside the bucket
-    row via a two-step explode (posexplode, then a tail-slice explode) so
-    no intermediate array ever exceeds the bucket cap in size — the
-    quadratic pair stream is produced row-at-a-time in codegen exactly
-    like the former join's output, then partially aggregated map-side
-    before the only other exchange (by pair). sort_array orders members
-    by id, so emitted pairs satisfy id1 < id2 by construction.
+    Dataflow: ``grouped_pairs`` (operators/joins.py) builds the inverted
+    index as grouped posting lists with each doc's set size as member
+    payload, in one shuffle; its pair rows are partially aggregated
+    map-side into the intersection count before the only other exchange
+    (by pair).
     """
     base = spread_small_input(
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")), key="id"
@@ -153,38 +117,19 @@ def jaccard_pairs_with_drops(
     # on the REAL strings, lazily — it only computes when a caller
     # consumes the drops side.
     exh = ex.select("id", "sz", F.xxhash64("shingle").alias("h"))
-    buckets = exh.groupBy("h").agg(
-        F.sort_array(F.collect_list(F.struct("id", "sz"))).alias("members"),
-        F.count("*").alias("bucket_size"),
-    )
+    rows, _ = grouped_pairs(exh, ["h"], "id", payload=["sz"], max_bucket_size=max_bucket_size)
     if max_bucket_size is not None:
         drops = (
             ex.groupBy("shingle")
             .agg(F.count("*").alias("bucket_size"))
             .where(F.col("bucket_size") > max_bucket_size)
         )
-        kept = buckets.where(F.col("bucket_size") <= max_bucket_size)
     else:
         drops = (
             ex.select("shingle").limit(0).withColumn("bucket_size", F.lit(0).cast("long"))
         )
-        kept = buckets
-    # two-step pair expansion: row memory stays O(bucket), never O(bucket²)
-    lhs = kept.select(
-        F.posexplode("members").alias("i", "m1"), F.col("members")
-    )
-    pairs_raw = lhs.select(
-        F.col("m1.id").alias("id1"),
-        F.col("m1.sz").alias("sz1"),
-        F.explode(
-            F.slice("members", F.col("i") + 2, F.size("members"))
-        ).alias("m2"),
-    )
-    inter = pairs_raw.groupBy(
-        "id1",
-        F.col("m2.id").alias("id2"),
-        "sz1",
-        F.col("m2.sz").alias("sz2"),
+    inter = rows.groupBy(
+        "id1", "id2", F.col("m1.sz").alias("sz1"), F.col("m2.sz").alias("sz2")
     ).agg(F.count("*").alias("inter_size"))
     pairs = (
         inter.where(

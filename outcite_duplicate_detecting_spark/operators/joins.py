@@ -1,26 +1,26 @@
-"""Candidate-pair generation joins with explicit skew handling.
+"""The grouped pair generator behind every candidate join.
 
 The LSH band equi-join (SURVEY.md §2.3; reference analogue: the lexsort
 adjacency scan in /root/reference/code/blocking/code/
 simhash_components_disk_v3.py:258-275) groups a postings DataFrame
 ``(id, key...)`` into per-key member lists in ONE shuffle — bucket
-size, the cap filter, and pair generation (posexplode + tail-slice
-explode, row memory O(bucket)) all derive from that single aggregation
-(r6; formerly a bucket-size aggregation + broadcast anti-join + a
-two-sided self-join that shuffled the postings twice). Hot keys (a band
-shared by an exact-dup cluster, a ubiquitous fingerprint) still make
-all-pairs generation quadratic in the bucket size, so two explicit
-controls are provided — the reference's analogue is its hard 25000-doc
-group guard (/root/reference/code/common.py:96):
+size, the cap filter, and pair generation all derive from that single
+aggregation. MinHash bands, SimHash blocks (with the signature as member
+payload), the substring min-fingerprint probe and exact Jaccard (with the
+set size as payload) all call ``grouped_pairs``.
+
+Skew handling is the cap plus bounded row memory:
 
 - ``max_bucket_size``: buckets above the cap are excluded from pair
   generation and *accounted for* in a drops DataFrame (north_rule:
-  documented drop counters, never silent truncation).
-- ``salted_all_pairs``: an exact triangle-cell decomposition that splits a
-  hot key's all-pairs work across ``salt``² join cells so no single task
-  owns a whole hot bucket. Each unordered pair is produced exactly once.
+  documented drop counters, never silent truncation) — the reference's
+  hard 25000-doc group guard (reference code/common.py:96).
+- pairs are expanded by posexplode + tail-slice explode, so row memory
+  is O(bucket), never O(bucket²), and the quadratic pair stream of a
+  kept bucket is produced row-at-a-time inside whole-stage codegen.
 
-Both paths produce ordered pairs (id1 < id2), distinct.
+The member list of an over-cap key is still built before the cap filter
+drops it, so a single key must fit in one aggregation buffer.
 """
 
 from __future__ import annotations
@@ -37,66 +37,43 @@ class PairGenResult:
     drops: DataFrame  # (key..., bucket_size) buckets excluded by the cap
 
 
-def band_candidate_pairs(
+def grouped_pairs(
     postings: DataFrame,
     key_cols: list[str],
     id_col: str = "id",
+    payload: list[str] | None = None,
     max_bucket_size: int | None = None,
-    salt: int | None = None,
     probe_left: DataFrame | None = None,
-    probe_unique: bool = False,
-) -> PairGenResult:
-    """All distinct ordered id pairs co-occurring under any key.
+) -> tuple[DataFrame, DataFrame]:
+    """(pair rows, drops) for every two members sharing a key.
 
-    ``postings`` rows: (id, key...). Multiple keys per id are expected
-    (bands, fingerprints); the output is distinct across keys.
+    Pair rows are NOT deduplicated across keys: (id1, id2) plus, when
+    ``payload`` names member columns (e.g. ``["sig"]``), each side's member
+    struct ``m1`` / ``m2`` of (id, *payload) so the caller can verify the
+    pair in the same codegen stage. id1 < id2 always holds, and a
+    duplicated (id, key) posting never pairs a doc with itself. In self
+    mode ``m1`` is id1's member; in probe mode ``m1`` is the probe row and
+    ``m2`` the index member, so a payload predicate must be symmetric in
+    the two sides (Hamming distance is). drops: (key..., bucket_size) for
+    every key over ``max_bucket_size``.
 
-    ``probe_left``: optional EXPANDED postings (same schema) joined
-    against the original table instead of a plain self-join — the
+    ``probe_left``: optional EXPANDED postings (same columns) joined
+    against the grouped index instead of pairing within each bucket — the
     multi-probe pattern (e.g. 1-bit simhash band flips). Bucket sizes and
-    the cap are always measured on the ORIGINAL postings; dropped keys are
-    excluded from both sides. Mutually exclusive with ``salt``.
+    the cap are always measured on the ORIGINAL postings; a dropped key is
+    absent from the index, so it is excluded from both sides.
 
-    ``probe_unique``: set when ``probe_left`` posts at most ONE row per
-    id (e.g. the substring detector's global-min fingerprint probe) — a
-    pair is then generated at most once per probe orientation (≤2 total,
-    exactly when each side carries the other's min in its posting set),
-    so the trailing distinct exchange is skipped and deduplication is
-    deferred to the caller's verification (which already ends in a
-    distinct). Only valid for callers whose downstream dedups.
+    Pairs and drops are lazy plans over the same ``postings``: a caller
+    consuming both recomputes the postings upstream once per side unless
+    it materializes them first.
     """
-    assert probe_left is None or not (salt and salt > 1), "probe+salt unsupported"
-    keyed = postings.select(id_col, *key_cols)
-
-    if salt and salt > 1:
-        # the triangle-cell decomposition needs raw postings rows, so the
-        # salted path keeps the anti-join cap form
-        if max_bucket_size is not None:
-            sizes = keyed.groupBy(*key_cols).agg(F.count("*").alias("bucket_size"))
-            drops = sizes.filter(F.col("bucket_size") > max_bucket_size)
-            keyed = keyed.join(
-                F.broadcast(drops.select(*key_cols)), on=key_cols, how="left_anti"
-            )
-        else:
-            drops = (
-                keyed.select(*key_cols)
-                .limit(0)
-                .withColumn("bucket_size", F.lit(0).cast("long"))
-            )
-        # salted pairs are unique but ordered by cell, not id — normalize
-        pairs = salted_all_pairs(keyed, key_cols, id_col, salt).select(
-            F.least("id1", "id2").alias("id1"),
-            F.greatest("id1", "id2").alias("id2"),
-        )
-        return PairGenResult(pairs.select("id1", "id2").distinct(), drops)
-
-    # single-pass grouped form (r6): ONE shuffle builds the inverted index
-    # as grouped posting lists — bucket size, the cap filter, and pair
-    # generation all come from the same aggregation, replacing the former
-    # bucket-size aggregation + broadcast anti-join + key self-join
-    # (which shuffled the postings twice and scanned them four ways).
+    payload = payload or []
+    keyed = postings.select(id_col, *payload, *key_cols)
+    # id-only form collects bare ids; the payload form collects structs
+    # ordered by id first, so sorting either orders members by id
+    member = F.struct(id_col, *payload) if payload else F.col(id_col)
     grouped = keyed.groupBy(*key_cols).agg(
-        F.sort_array(F.collect_list(id_col)).alias("members"),
+        F.sort_array(F.collect_list(member)).alias("members"),
         F.count("*").alias("bucket_size"),
     )
     if max_bucket_size is not None:
@@ -106,75 +83,62 @@ def band_candidate_pairs(
         kept = grouped.where(F.col("bucket_size") <= max_bucket_size)
     else:
         drops = (
-            keyed.select(*key_cols)
-            .limit(0)
-            .withColumn("bucket_size", F.lit(0).cast("long"))
+            keyed.select(*key_cols).limit(0).withColumn("bucket_size", F.lit(0).cast("long"))
         )
         kept = grouped
 
+    mid = (lambda c: F.col(c)[id_col]) if payload else F.col
     if probe_left is not None:
         # asymmetric probe join: probe rows hit the grouped index bucket
-        # and fan out over its members. A dropped key is absent from
-        # `kept`, so the inner join excludes it from both sides — the cap
-        # is still measured on the ORIGINAL postings only. A ≤1-bit
-        # flipped band matches in BOTH probe directions (XOR symmetric),
-        # so least/greatest normalization keeps exactly one orientation.
-        probe = probe_left.select(F.col(id_col).alias("_pid"), *key_cols)
-        pairs = (
-            probe.join(kept.select(*key_cols, "members"), on=key_cols)
-            .select("_pid", F.explode("members").alias("_mid"))
-            .where(F.col("_pid") != F.col("_mid"))
-            .select(
-                F.least("_pid", "_mid").alias("id1"),
-                F.greatest("_pid", "_mid").alias("id2"),
-            )
+        # and fan out over its members. A ≤1-bit flipped band matches in
+        # BOTH probe directions (XOR symmetric), so least/greatest ids keep
+        # one orientation; callers dedup across keys. Members are not
+        # swapped: per-field CASE orientation grew this stage's generated
+        # method past the JIT's huge-method limit (measured 2× slower on
+        # the SimHash multi-probe join, local[2] on a 4-CPU host).
+        hits = probe_left.select(id_col, *payload, *key_cols).join(
+            kept.select(*key_cols, "members"), on=key_cols
         )
-        if probe_unique:
-            return PairGenResult(pairs.select("id1", "id2"), drops)
+        rows = hits.select(member.alias("m1"), F.explode("members").alias("m2"))
+        id1 = F.least(mid("m1"), mid("m2"))
+        id2 = F.greatest(mid("m1"), mid("m2"))
     else:
-        # two-step pair expansion (posexplode + tail-slice explode): row
-        # memory stays O(bucket), never O(bucket²); sort_array orders
-        # members so emitted pairs satisfy id1 < id2 by construction
-        lhs = kept.select(F.posexplode("members").alias("i", "id1"), F.col("members"))
-        pairs = lhs.select(
-            "id1",
-            F.explode(F.slice("members", F.col("i") + 2, F.size("members"))).alias(
-                "id2"
-            ),
-        ).where(F.col("id1") < F.col("id2"))
+        lhs = kept.select(F.posexplode("members").alias("i", "m1"), "members")
+        rows = lhs.select(
+            "m1", F.explode(F.slice("members", F.col("i") + 2, F.size("members"))).alias("m2")
+        )
+        id1, id2 = mid("m1"), mid("m2")
+    extra = ["m1", "m2"] if payload else []
+    rows = rows.select(id1.alias("id1"), id2.alias("id2"), *extra)
+    return rows.where(F.col("id1") < F.col("id2")), drops
+
+
+def band_candidate_pairs(
+    postings: DataFrame,
+    key_cols: list[str],
+    id_col: str = "id",
+    max_bucket_size: int | None = None,
+    probe_left: DataFrame | None = None,
+    probe_unique: bool = False,
+) -> PairGenResult:
+    """All distinct ordered id pairs co-occurring under any key — the
+    id-only form of ``grouped_pairs``.
+
+    ``probe_unique``: set when ``probe_left`` posts at most ONE row per
+    id (e.g. the substring detector's global-min fingerprint probe) — a
+    pair is then generated at most once per probe orientation (≤2 total,
+    exactly when each side carries the other's min in its posting set),
+    so the trailing distinct exchange is skipped and deduplication is
+    deferred to the caller's verification (which already ends in a
+    distinct). Only valid for callers whose downstream dedups.
+    """
+    pairs, drops = grouped_pairs(
+        postings, key_cols, id_col, max_bucket_size=max_bucket_size, probe_left=probe_left
+    )
+    if probe_left is not None and probe_unique:
+        return PairGenResult(pairs, drops)
     # plain distinct: map-side partial dedup collapses the (band-count ×)
     # duplicate factor before the shuffle. Reducer parallelism for these
     # byte-small/CPU-heavy shuffles is protected by the session's
     # adaptive.coalescePartitions.minPartitionSize setting (session.py).
-    return PairGenResult(pairs.select("id1", "id2").distinct(), drops)
-
-
-def salted_all_pairs(
-    keyed: DataFrame, key_cols: list[str], id_col: str, salt: int
-) -> DataFrame:
-    """Exact all-pairs within each key bucket via triangle-cell salting.
-
-    Assign each row a cell c = hash(id) mod salt. For the unordered cell
-    pair (i ≤ j): the left relation replicates each row with c = i to every
-    j ≥ i, the right relation keeps rows at their own cell, and the join key
-    is (key, j). A pair (a at cell ca ≤ cb of b) is then produced exactly
-    once — at join cell cb — and the tie ca == cb is broken by id order.
-    The effect: a bucket of n rows is processed as salt² cells of ~n/salt
-    rows instead of one quadratic task.
-    """
-    c = F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt)).cast("int")
-    base = keyed.withColumn("_cell", c)
-    left = base.select(
-        *key_cols,
-        F.col(id_col).alias("id1"),
-        F.col("_cell").alias("_c1"),
-        F.explode(F.sequence(F.col("_cell"), F.lit(salt - 1))).alias("_j"),
-    )
-    right = base.select(
-        *key_cols, F.col(id_col).alias("id2"), F.col("_cell").alias("_j"),
-    ).withColumn("_c2", F.col("_j"))
-    joined = left.join(right, on=[*key_cols, "_j"])
-    keep = (F.col("_c1") < F.col("_c2")) | (
-        (F.col("_c1") == F.col("_c2")) & (F.col("id1") < F.col("id2"))
-    )
-    return joined.where(keep).select(*key_cols, "id1", "id2")
+    return PairGenResult(pairs.distinct(), drops)

@@ -11,8 +11,7 @@ BASELINE.json north_rule. Dataflow, scale-first:
    **zero shuffle** up to this point,
 4. band keys derived JVM-side from the signature array (xxhash64 over
    (band index, band slice)), exploded to a postings table (id, band_key),
-5. candidate pairs via the (salt-able, cap-able) band self-join
-   (operators/joins.py),
+5. candidate pairs via the capped grouped band join (operators/joins.py),
 6. verification joins the candidates back to the shingle arrays and keeps
    pairs whose **exact** Jaccard clears the threshold (array_intersect in
    the JVM) — so LSH only affects recall, never precision, and the final
@@ -55,7 +54,6 @@ class MinHashConfig:
     threshold: float = 0.8
     seed: int = 42
     max_bucket_size: int | None = 25000  # reference group guard, common.py:96
-    salt: int | None = None
     # "python": shingle + hash + sign entirely inside one Arrow-batched UDF
     # (only the text column crosses Arrow) — the scale path.
     # "catalyst": shingle/hash as JVM expressions, UDF folds hash arrays.
@@ -156,7 +154,6 @@ def minhash_candidate_pairs(
         key_cols=["band_key"],
         id_col="id",
         max_bucket_size=cfg.max_bucket_size,
-        salt=cfg.salt,
     )
 
 

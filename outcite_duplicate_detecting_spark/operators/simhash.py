@@ -18,12 +18,11 @@ counts reduce per-doc via np.add.reduceat — no per-gram Python loop.
 
 Scale note (10^12 docs): 8-bit block keys collide at rate 1/256, so the
 naive candidate join is quadratic at web scale. Controls, in order:
-(1) collapse exact dups first (operators/dedup.collapse_exact),
-(2) ``max_bucket_size`` cap with drop counters (reference guard analogue,
-    /root/reference/code/common.py:96),
+(1) the pipeline's collapse stage removes exact dups first
+    (plans/pipeline.py),
+(2) ``max_bucket_size`` cap with drop counters (operators/joins.py),
 (3) the ``bits_per_band=16`` configuration (4 blocks, exact for k ≤ 3) whose
-    keys collide at 1/65536 — the recommended web-scale setting,
-(4) triangle-cell salting of hot blocks (operators/joins.salted_all_pairs).
+    keys collide at 1/65536 — the recommended web-scale setting.
 """
 
 from __future__ import annotations
@@ -43,7 +42,7 @@ from ..functions.hashing import (
 )
 from ..functions.partitioning import spread_small_input
 from ..functions.text import char_ngrams, py_word_shingles, py_words, word_shingles
-from .joins import PairGenResult, band_candidate_pairs
+from .joins import grouped_pairs
 
 
 @dataclass
@@ -65,7 +64,6 @@ class SimHashConfig:
     # probabilistic.
     multi_probe: bool = False
     max_bucket_size: int | None = 25000
-    salt: int | None = None
     # "wordhash" (default, word features only): FNV-hash each word once,
     # derive gram hashes from word hashes by vector arithmetic
     # (functions/hashing.hash_shingles_from_word_hashes — the unified
@@ -243,8 +241,8 @@ def simhash_pairs(
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")), key="id"
     )
     signed = add_simhash(base, cfg, text_col="text").select("id", "simhash")
-    if cfg.multi_probe or (cfg.salt and cfg.salt > 1):
-        # multi-probe/salt consume `signed` twice (index + probe sides);
+    if cfg.multi_probe:
+        # multi-probe consumes `signed` twice (index + probe sides);
         # materialize so the signing UDF runs once. The default grouped
         # path is a single linear chain — no checkpoint needed.
         signed = signed.localCheckpoint(eager=True)
@@ -257,97 +255,35 @@ def simhash_verified_pairs(
     """Band join and Hamming verification FUSED into one operator:
     (verified_pairs, dropped_buckets).
 
-    The postings carry the 8-byte signature, so the band equi-join's output
-    rows are filtered by ``bit_count(sig1 xor sig2) ≤ k`` inside whole-stage
-    codegen BEFORE anything materializes. Versus the candidates-then-verify
-    composition (``simhash_candidate_pairs`` + ``hamming_verify``) this
-    removes the candidate-pair distinct shuffle and two signature
-    join-backs — at multi-probe candidate volumes (n²·(w+1)/2^w per band on
+    The postings carry the 8-byte signature as ``grouped_pairs`` member
+    payload, so the band equi-join's output rows are filtered by
+    ``bit_count(sig1 xor sig2) ≤ k`` inside whole-stage codegen BEFORE
+    anything materializes. Versus a candidates-then-verify composition
+    (distinct candidate ids joined back to the signatures) this removes
+    the candidate-pair distinct shuffle and two signature join-backs — at multi-probe candidate volumes (n²·(w+1)/2^w per band on
     uniform signatures) those dominate the detector: measured 65.7M
     candidate rows → 231s at 8 cores for 400k docs, vs the same exact
     output through this path with the only shuffle being the postings
     exchange (+8 bytes/row). The surviving pair set is tiny (verified
     pairs), so the final distinct is cheap.
 
-    Multi-probe orientation note: a ≤1-bit-flipped band matches in BOTH
-    probe directions (XOR is symmetric — probe(a) hits band(b) iff
-    probe(b) hits band(a)), so the plain ``id1 < id2`` predicate keeps
-    exactly one instance of every pair; no double-orientation pass needed.
+    Multi-probe: a ≤1-bit-flipped band matches in BOTH probe directions
+    (XOR is symmetric), and the generator's least/greatest orientation plus
+    the final distinct keep exactly one instance of every pair.
     """
-    if cfg.salt and cfg.salt > 1:
-        # triangle-cell salting needs the generic pair generator; verify
-        # joins back (the salted path is for corpora with hot bands where
-        # candidate volume is dominated by true near-dup mass anyway)
-        s = signed.select(
-            F.col(id_col).alias("id"), F.col(sig_col).alias("simhash")
-        )
-        cands = simhash_candidate_pairs(s, cfg, id_col="id")
-        return hamming_verify(cands.pairs, s, cfg), cands.drops
-    # grouped single-pass form (r6, mirrors joins.band_candidate_pairs):
-    # ONE shuffle groups the index postings into per-bucket member lists —
-    # bucket size, the cap filter, and pair generation come from the same
-    # aggregation (formerly: a bucket-size aggregation + broadcast
-    # anti-joins + a two-sided key join). The Hamming filter still runs
-    # inside whole-stage codegen directly on the explode output, so no
-    # candidate set ever materializes.
     postings = block_postings(signed, cfg, id_col=id_col, sig_col=sig_col, keep_sig=True)
-    grouped = postings.groupBy("band_key").agg(
-        F.sort_array(F.collect_list(F.struct("id", "sig"))).alias("members"),
-        F.count("*").alias("bucket_size"),
+    probe = (
+        probe_block_postings(signed, cfg, id_col=id_col, sig_col=sig_col, keep_sig=True)
+        if cfg.multi_probe
+        else None
     )
-    if cfg.max_bucket_size is not None:
-        drops = grouped.where(F.col("bucket_size") > cfg.max_bucket_size).select(
-            "band_key", "bucket_size"
-        )
-        kept = grouped.where(F.col("bucket_size") <= cfg.max_bucket_size)
-    else:
-        drops = (
-            postings.select("band_key")
-            .limit(0)
-            .withColumn("bucket_size", F.lit(0).cast("long"))
-        )
-        kept = grouped
-    if cfg.multi_probe:
-        # a ≤1-bit flipped band matches in BOTH probe directions (XOR is
-        # symmetric), so least/greatest keeps exactly one instance
-        probe = probe_block_postings(
-            signed, cfg, id_col=id_col, sig_col=sig_col, keep_sig=True
-        )
-        hits = (
-            probe.join(kept.select("band_key", "members"), "band_key")
-            .select(
-                F.col("id").alias("_pid"),
-                F.col("sig").alias("_psig"),
-                F.explode("members").alias("m"),
-            )
-            .where(F.col("_pid") != F.col("m.id"))
-            .withColumn(
-                "hamming_dist", hamming(F.col("_psig"), F.col("m.sig")).cast("int")
-            )
-            .where(F.col("hamming_dist") <= cfg.hamming_k)
-            .select(
-                F.least("_pid", F.col("m.id")).alias("id1"),
-                F.greatest("_pid", F.col("m.id")).alias("id2"),
-                "hamming_dist",
-            )
-        )
-    else:
-        lhs = kept.select(F.posexplode("members").alias("i", "m1"), F.col("members"))
-        hits = (
-            lhs.select(
-                F.col("m1.id").alias("id1"),
-                F.col("m1.sig").alias("sig1"),
-                F.explode(
-                    F.slice("members", F.col("i") + 2, F.size("members"))
-                ).alias("m2"),
-            )
-            .where(F.col("id1") < F.col("m2.id"))
-            .withColumn(
-                "hamming_dist", hamming(F.col("sig1"), F.col("m2.sig")).cast("int")
-            )
-            .where(F.col("hamming_dist") <= cfg.hamming_k)
-            .select("id1", F.col("m2.id").alias("id2"), "hamming_dist")
-        )
+    rows, drops = grouped_pairs(
+        postings, ["band_key"], "id", payload=["sig"],
+        max_bucket_size=cfg.max_bucket_size, probe_left=probe,
+    )
+    hits = rows.select(
+        "id1", "id2", hamming(F.col("m1.sig"), F.col("m2.sig")).cast("int").alias("hamming_dist")
+    ).where(F.col("hamming_dist") <= cfg.hamming_k)
     return hits.distinct(), drops
 
 
@@ -371,39 +307,4 @@ def probe_block_postings(
     extra = [F.col(sig_col).alias("sig")] if keep_sig else []
     return df.select(
         F.col(id_col).alias("id"), *extra, F.explode(F.array(*entries)).alias("band_key")
-    )
-
-
-def simhash_candidate_pairs(
-    signed: DataFrame, cfg: SimHashConfig, id_col: str = "id", sig_col: str = "simhash"
-) -> PairGenResult:
-    postings = block_postings(signed, cfg, id_col=id_col, sig_col=sig_col)
-    probe = (
-        probe_block_postings(signed, cfg, id_col=id_col, sig_col=sig_col)
-        if cfg.multi_probe
-        else None
-    )
-    return band_candidate_pairs(
-        postings,
-        key_cols=["band_key"],
-        id_col="id",
-        max_bucket_size=cfg.max_bucket_size,
-        salt=cfg.salt,
-        probe_left=probe,
-    )
-
-
-def hamming_verify(
-    pairs: DataFrame, signed: DataFrame, cfg: SimHashConfig, sig_col: str = "simhash"
-) -> DataFrame:
-    """popcount(xor) ≤ k verification of candidate pairs against
-    (id, simhash) signatures."""
-    s1 = signed.select(F.col("id").alias("id1"), F.col(sig_col).alias("sig1"))
-    s2 = signed.select(F.col("id").alias("id2"), F.col(sig_col).alias("sig2"))
-    return (
-        pairs.join(s1, "id1")
-        .join(s2, "id2")
-        .withColumn("hamming_dist", hamming(F.col("sig1"), F.col("sig2")).cast("int"))
-        .where(F.col("hamming_dist") <= cfg.hamming_k)
-        .select("id1", "id2", "hamming_dist")
     )

@@ -65,10 +65,8 @@ class SubstringConfig:
     # a ubiquitous boilerplate fingerprint must never blow up silently.
     # (With the min-fp query side the join is linear per bucket — index
     # rows × the handful of min-fp queries landing there — so the cap is a
-    # boilerplate guard, not a quadratic guard, and salting is moot.)
+    # boilerplate guard, not a quadratic guard.)
     max_fingerprint_df: int | None = 25000
-    salt: int | None = None  # retained for config compat; unused since the
-    # asymmetric min-fp join replaced the all-pairs self-join
 
     @property
     def guarantee_t(self) -> int:

@@ -28,7 +28,7 @@ Scale design (10^12 docs, 1000 executors):
   before them is map-side (signatures are per-row pandas UDFs),
 - exact-dup collapse runs FIRST so web-scale boilerplate/exact reposts never
   reach a pairwise join as hot bands,
-- candidate joins carry bucket caps + optional salting (operators/joins.py),
+- candidate joins carry bucket caps with drop counters (operators/joins.py),
 - CC rounds localCheckpoint to keep plans flat; edges are a tiny fraction
   of corpus size after verification,
 - doc ids are xxhash64(url, warc_ts) longs by default;

@@ -6,9 +6,8 @@ handling, Arrow on for pandas-UDF transfer, UTC session timezone so
 results compare cleanly against the DuckDB oracle.
 
 On a real cluster the same builder is used via ``spark-submit --py-files``;
-only ``master`` / memory flags change. Iceberg catalog support is gated
-behind an import/config try so the module works without the runtime jar
-(the sandbox has none) — see ``sources/catalog.py``.
+only ``master`` / memory flags change. No Iceberg catalog is configured:
+tables are read as parquet paths (``sources/tables.py``).
 """
 
 from __future__ import annotations

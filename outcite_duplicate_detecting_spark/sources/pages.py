@@ -9,8 +9,8 @@ structure drives the recall ≥ 0.99 gate:
 - fuzzy clusters (character-level noise; SimHash regime)
 - substring dups (text A wholly contained in B, shared run ≥ 50 chars)
 - hard negatives (same template vocabulary, Jaccard ≤ 0.5)
-- one hot cluster holding ~5% of rows (exercises skew salting and the
-  oversize-bucket guard — reference analogue /root/reference/code/common.py:96)
+- one hot cluster holding ~5% of rows (exercises the oversize-bucket
+  guard — reference analogue code/common.py:96)
 
 Generation is pure numpy with a fixed seed; row content is a function of
 the row index only, so the corpus is identical at any partitioning or

@@ -1,11 +1,8 @@
 """Test-table loaders.
 
 The driver-generated parquet tables live at /root/testdata/sf*/ (TPC-H-ish
-star schema + events/documents/embeddings, see TESTDATA.md). At cluster
-scale the same call sites read Iceberg tables instead — ``load_table``
-goes through ``catalog.read_table`` which prefers an Iceberg catalog when
-the runtime jar is present and falls back to parquet paths (this sandbox
-has no Iceberg jar).
+star schema + events/documents/embeddings, see TESTDATA.md) and are read
+as plain parquet paths.
 """
 
 from __future__ import annotations

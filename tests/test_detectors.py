@@ -5,12 +5,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from outcite_duplicate_detecting_spark.functions.hashing import fnv1a64_strings, simhash64
-from outcite_duplicate_detecting_spark.operators.dedup import (
-    collapse_exact,
-    exact_duplicates,
-    jaccard_pairs,
-)
-from outcite_duplicate_detecting_spark.operators.joins import band_candidate_pairs, salted_all_pairs
+from outcite_duplicate_detecting_spark.operators.dedup import exact_duplicates, jaccard_pairs
+from outcite_duplicate_detecting_spark.operators.joins import band_candidate_pairs, grouped_pairs
 from outcite_duplicate_detecting_spark.operators.minhash import MinHashConfig, minhash_lsh_pairs
 from outcite_duplicate_detecting_spark.operators.simhash import SimHashConfig, simhash_pairs
 from outcite_duplicate_detecting_spark.operators.substring import SubstringConfig, substring_pairs
@@ -68,19 +64,6 @@ def test_exact_duplicates(spark, corpus):
         ids = sorted(pdf.index[pdf["text"] == pdf["text"][r["member_ids"][0]]].tolist())
         assert r["member_ids"] == ids
         assert r["canonical_id"] == ids[0]
-
-
-def test_collapse_exact_roundtrip(spark, corpus):
-    pdf, df = corpus
-    reps, membership = collapse_exact(df)
-    assert reps.count() == pdf["text"].nunique()
-    assert membership.count() == len(pdf)
-    # every member maps to a rep with identical text
-    joined = (
-        membership.join(df.select(F.col("doc_id").alias("id"), F.col("text").alias("t_member")), "id")
-        .join(reps.select(F.col("rep_id"), F.col("text").alias("t_rep")), "rep_id")
-    )
-    assert joined.where(F.col("t_member") != F.col("t_rep")).count() == 0
 
 
 def test_jaccard_pairs_exact_oracle(spark, corpus):
@@ -267,27 +250,28 @@ def test_substring_minfp_recall_adversarial_ties(spark, seed):
     assert got == want
 
 
-def test_salted_all_pairs_equals_naive(spark):
-    rng = np.random.RandomState(3)
-    rows = [(int(i), int(k)) for i, k in enumerate(rng.randint(0, 5, size=300))]
-    df = spark.createDataFrame(rows, "id long, band_key long")
-    naive = band_candidate_pairs(df, ["band_key"], "id").pairs
-    salted = band_candidate_pairs(df, ["band_key"], "id", salt=4).pairs
-    a = {(r["id1"], r["id2"]) for r in naive.collect()}
-    b = {(r["id1"], r["id2"]) for r in salted.collect()}
-    assert a == b
-    # exactly-once check (no dup pairs pre-distinct)
-    raw = salted_all_pairs(df, ["band_key"], "id", 4)
-    assert raw.count() == raw.distinct().count()
-
-
-def test_bucket_cap_drops_accounted(spark):
-    rows = [(int(i), 1) for i in range(100)] + [(100 + int(i), 2) for i in range(3)]
-    df = spark.createDataFrame(rows, "id long, band_key int")
-    res = band_candidate_pairs(df, ["band_key"], "id", max_bucket_size=10)
-    assert res.pairs.count() == 3  # only the small bucket pairs
-    d = res.drops.collect()
-    assert len(d) == 1 and d[0]["bucket_size"] == 100
+@pytest.mark.parametrize("form", ["self", "probe", "payload"])
+def test_bucket_cap_drops_accounted(spark, form):
+    """A 20000-member hot key over a cap of 1000 is dropped and counted,
+    not paired, in every form of the grouped pair generator. Key 2 mixes
+    two hot-key members with one outsider and carries a duplicated
+    (id, key) posting, which must never pair a doc with itself."""
+    hot = spark.range(20000).select(F.col("id"), F.lit(1).alias("band_key"))
+    small = spark.createDataFrame(
+        [(0, 2), (1, 2), (100000, 2), (100000, 2)], "id long, band_key int"
+    )
+    df = hot.unionByName(small).withColumn("w", F.col("id") * 2)
+    if form == "payload":
+        rows, drops = grouped_pairs(df, ["band_key"], "id", payload=["w"], max_bucket_size=1000)
+        got = rows.collect()
+        assert all(r["m1"]["w"] == 2 * r["id1"] and r["m2"]["w"] == 2 * r["id2"] for r in got)
+    else:
+        probe = df if form == "probe" else None
+        res = band_candidate_pairs(df, ["band_key"], "id", max_bucket_size=1000, probe_left=probe)
+        got, drops = res.pairs.collect(), res.drops
+    assert all(r["id1"] < r["id2"] for r in got)  # no self-pair, oriented
+    assert {(r["id1"], r["id2"]) for r in got} == {(0, 1), (0, 100000), (1, 100000)}
+    assert [tuple(r) for r in drops.collect()] == [(1, 20000)]
 
 
 def test_jaccard_pairs_hot_shingle_cap(spark):
@@ -331,14 +315,3 @@ def test_simhash_multiprobe_exact_k7_at_16bit(spark, corpus):
     got = {(r["id1"], r["id2"]) for r in verified.collect()}
     assert drops.count() == 0
     assert got == want  # exact: no tail loss, no false positives
-
-
-def test_simhash_salted_equals_fused(spark, corpus):
-    """The triangle-salted fallback path produces the same verified pair
-    set as the fused join-verify (salting only re-cells the work)."""
-    pdf, df = corpus
-    v1, _ = simhash_pairs(df, SimHashConfig())
-    v2, _ = simhash_pairs(df, SimHashConfig(salt=4))
-    a = {(r["id1"], r["id2"], r["hamming_dist"]) for r in v1.collect()}
-    b = {(r["id1"], r["id2"], r["hamming_dist"]) for r in v2.collect()}
-    assert a == b

@@ -108,10 +108,7 @@ def test_pipeline_simhash_config_covers_hamming_tail(spark):
     probabilistically. Plants pairs at exactly hamming 4, 5, 6, 7."""
     import random
 
-    from outcite_duplicate_detecting_spark.operators.simhash import (
-        hamming_verify,
-        simhash_candidate_pairs,
-    )
+    from outcite_duplicate_detecting_spark.operators.simhash import simhash_verified_pairs
 
     cfg = PipelineConfig().simhash
     assert cfg.multi_probe and cfg.bits_per_band == 16
@@ -131,11 +128,8 @@ def test_pipeline_simhash_config_covers_hamming_tail(spark):
             want.add((next_id, next_id + 1))
             next_id += 2
     signed = spark.createDataFrame(rows, "id long, simhash long")
-    cands = simhash_candidate_pairs(signed, cfg, id_col="id")
-    got = {
-        (r["id1"], r["id2"])
-        for r in hamming_verify(cands.pairs, signed, cfg).collect()
-    }
+    verified, _drops = simhash_verified_pairs(signed, cfg, id_col="id")
+    got = {(r["id1"], r["id2"]) for r in verified.collect()}
     assert want <= got  # every planted 4..7 pair caught — exact tail coverage
 
 

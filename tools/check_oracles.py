@@ -9,12 +9,15 @@ bools only, except where noted).
 
 from __future__ import annotations
 
+import os
 import sys
 from collections import Counter
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# check the checkout this script lives in, wherever it is run from
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from outcite_duplicate_detecting_spark.sources.tables import TABLES  # noqa: E402
@@ -58,7 +61,7 @@ def multiset(rows, cols):
 def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None) -> int:
     from outcite_duplicate_detecting_spark.session import get_spark
 
-    spark = get_spark(cores=8)
+    spark = get_spark(cores=len(os.sched_getaffinity(0)))
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
