@@ -8,7 +8,7 @@
 - ``simhash64``: bit-majority fold of per-feature 64-bit hashes into one
   64-bit signature (reference: feats2docint, simhash_components_disk_v3.py:
   182-187 — unpack bits, sum per position, threshold at half).
-- ``minhash_params`` / ``minhash_signatures``: k multiply-add permutations
+- ``minhash_params`` / ``minhash_signature``: k multiply-add permutations
   h_i(x) = (a_i*x + b_i) mod 2^64 with odd a_i (multiply-shift universal
   family; Broder-style MinHash), evaluated as ONE numpy broadcast per
   document — no Python-level loop over shingles.
@@ -144,15 +144,6 @@ def minhash_signature(elem_hashes: np.ndarray, a: np.ndarray, b: np.ndarray) -> 
     finally:
         np.seterr(**old)
     return sig
-
-
-def minhash_signature_batch(
-    list_of_hash_arrays: list, a: np.ndarray, b: np.ndarray
-) -> np.ndarray:
-    """(batch, k) uint64 signatures for a batch of documents."""
-    if not list_of_hash_arrays:
-        return np.empty((0, len(a)), dtype=np.uint64)
-    return np.stack([minhash_signature(h, a, b) for h in list_of_hash_arrays])
 
 
 # --- winnowing ---------------------------------------------------------------

@@ -38,7 +38,7 @@ _INTEGRAL = {"tinyint", "smallint", "int", "bigint"}
 
 def _id_col(df: DataFrame, name: str, alias: str):
     """Id columns stay whatever orderable type the caller uses (long ids,
-    128-bit struct<h1,h2> ids, strings); integral types are widened to long
+    128-bit binary ids, strings); integral types are widened to long
     so mixed int/long callers keep the legacy behavior."""
     c = F.col(name)
     if dict(df.dtypes).get(name) in _INTEGRAL:

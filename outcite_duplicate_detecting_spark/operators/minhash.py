@@ -4,15 +4,15 @@ Generalizes the reference's blocking stage (candidate generation without
 all-pairs comparison — /root/reference/code/blocking/) to web text, per
 BASELINE.json north_rule. Dataflow, scale-first:
 
-1. shingle JVM-side (``word_shingles`` — pure Catalyst expression),
-2. hash each shingle JVM-side with ``xxhash64`` (whole-stage codegen),
-3. one Arrow-batched pandas UDF turns each doc's shingle-hash array into a
-   ``num_perm``-long MinHash signature — a single numpy broadcast per doc,
-   **zero shuffle** up to this point,
-4. band keys derived JVM-side from the signature array (xxhash64 over
+1. one Arrow-batched pandas UDF (``signatures.add_all_signatures``, the
+   same kernels the pipeline's sign stage runs) hashes each word once
+   with FNV-1a 64, derives the n-gram shingle hashes from the word hashes
+   and turns them into a ``num_perm``-long MinHash signature — only the
+   text crosses Arrow, **zero shuffle** up to this point,
+2. band keys derived JVM-side from the signature array (xxhash64 over
    (band index, band slice)), exploded to a postings table (id, band_key),
-5. candidate pairs via the capped grouped band join (operators/joins.py),
-6. verification joins the candidates back to the shingle arrays and keeps
+3. candidate pairs via the capped grouped band join (operators/joins.py),
+4. verification joins the candidates back to the shingle arrays and keeps
    pairs whose **exact** Jaccard clears the threshold (array_intersect in
    the JVM) — so LSH only affects recall, never precision, and the final
    output is a deterministic function of the corpus.
@@ -27,23 +27,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..functions.hashing import (
-    fnv1a64_strings,
-    hash_shingles_from_word_hashes,
-    minhash_params,
-    minhash_signature,
-    minhash_signature_batch,
-    to_i64,
-)
 from ..functions.partitioning import spread_small_input
-from ..functions.text import py_words, word_shingles
 from .joins import PairGenResult, band_candidate_pairs
+from .signatures import add_all_signatures
 
 
 @dataclass
@@ -54,74 +43,11 @@ class MinHashConfig:
     threshold: float = 0.8
     seed: int = 42
     max_bucket_size: int | None = 25000  # reference group guard, common.py:96
-    # "python": shingle + hash + sign entirely inside one Arrow-batched UDF
-    # (only the text column crosses Arrow) — the scale path.
-    # "catalyst": shingle/hash as JVM expressions, UDF folds hash arrays.
-    shingler: str = "python"
 
     @property
     def rows_per_band(self) -> int:
         assert self.num_perm % self.bands == 0
         return self.num_perm // self.bands
-
-
-def add_signature(
-    df: DataFrame, cfg: MinHashConfig, text_col: str = "text", out_col: str = "minhash_sig"
-) -> DataFrame:
-    """Append shingle-hash set + MinHash signature (arrays of long).
-
-    Shingle *strings* never cross a process boundary — and in the default
-    python mode they are never even BUILT: the UDF receives only the text
-    (one string per row), hashes each word once (vectorized FNV-1a 64),
-    and derives every n-gram shingle hash from the word hashes by n-1
-    shifted-slice vector ops (``hash_shingles_from_word_hashes``, the
-    unified sign-stage kernel — ~45× cheaper than string-FNV over every
-    shingle, the dominant map-side cost at web scale). Shingle-set
-    *cardinalities* equal the string-set semantics (distinct word
-    sequences ↔ distinct hashes up to 64-bit collisions, ~1e-14/pair), so
-    exact-Jaccard verification on hash sets equals verification on string
-    sets."""
-    a, b = minhash_params(cfg.num_perm, cfg.seed)
-    out_schema = T.StructType(
-        [
-            T.StructField("shingle_hashes", T.ArrayType(T.LongType())),
-            T.StructField(out_col, T.ArrayType(T.LongType())),
-        ]
-    )
-
-    if cfg.shingler == "python":
-        n = cfg.shingle_n
-
-        @F.pandas_udf(out_schema)
-        def sign_text(texts: pd.Series) -> pd.DataFrame:
-            hash_lists, sig_lists = [], []
-            for t in texts:
-                wh = fnv1a64_strings(py_words(t))
-                hashes = hash_shingles_from_word_hashes(wh, n)
-                hash_lists.append(to_i64(hashes))
-                sig_lists.append(to_i64(minhash_signature(hashes, a, b)))
-            return pd.DataFrame({"shingle_hashes": hash_lists, out_col: sig_lists})
-
-        packed = df.withColumn("_sig", sign_text(F.col(text_col)))
-        return packed.select(
-            "*", F.col("_sig.shingle_hashes").alias("shingle_hashes"), F.col(f"_sig.{out_col}").alias(out_col)
-        ).drop("_sig")
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def sig_udf(hashes: pd.Series) -> pd.Series:
-        arrays = [
-            np.asarray(h, dtype=np.int64).view(np.uint64) if len(h) else np.empty(0, np.uint64)
-            for h in hashes
-        ]
-        sigs = minhash_signature_batch(arrays, a, b)
-        return pd.Series([to_i64(s).tolist() for s in sigs])
-
-    sh_hashes = F.transform(
-        word_shingles(text_col, cfg.shingle_n), lambda s: F.xxhash64(s)
-    )
-    return df.withColumn("shingle_hashes", sh_hashes).withColumn(
-        out_col, sig_udf("shingle_hashes")
-    )
 
 
 def band_postings(
@@ -211,7 +137,7 @@ def minhash_lsh_pairs(
     # UDF chain 3× when all consumers race inside one downstream action.
     # text is dropped — downstream only needs shingles + signature.
     signed = (
-        add_signature(base, cfg, text_col="text")
+        add_all_signatures(base, cfg)
         .select("id", "shingle_hashes", "minhash_sig")
         .localCheckpoint(eager=True)
     )

@@ -1,32 +1,33 @@
-"""Unified one-pass signature stage for the pipeline's three detectors.
+"""The one text-signing pass, shared by the pipeline and every detector.
 
-Standalone, each detector (minhash.py / simhash.py / substring.py) runs its
-own Arrow-batched UDF over the text column — three text transfers, two
-word-shingle passes, three stage barriers, three eager checkpoints. In the
-pipeline all three run over the SAME collapsed representatives, so this
-module computes every signature in one UDF pass per row:
+Each config passed in adds its columns; a ``None`` config leaves them out.
+The pipeline passes all three and signs its collapsed representatives
+once; a standalone detector passes its own config alone
+(``minhash_lsh_pairs``, ``simhash_pairs``, ``substring_pairs``,
+``streaming.stream_signatures``). Both therefore run the same kernels
+per row:
 
-    text ──► words ─ FNV(word) ─► 3-gram hash combos ─► minhash signature
-                              └─► 2-gram hash combos ─► simhash fold
-         └──────────► k-gram rolling hashes ──► winnowed fingerprints
+    text ──► words ─ FNV(word) ─► 3-gram hash combos ─► minhash signature  (mh)
+                              └─► 2-gram hash combos ─► simhash fold       (sh)
+         └──────────► k-gram rolling hashes ──► winnowed fingerprints      (sub)
 
-One Arrow transfer in (text), one out (4 numpy arrays — no Python list
-boxing), ONE checkpoint feeding all three candidate joins. Words are
-hashed once and shingle hashes derive from word hashes by vectorized
-arithmetic (``hash_shingles_from_word_hashes``) instead of re-hashing
-every shingle string — measured 2.2 → 1.3 ms/doc-core vs the per-detector
-UDF chains. This is the scale path (10^12 docs: the signature pass is the
-dominant map-side cost).
+One Arrow transfer in (text), one out (numpy arrays — no Python list
+boxing). Words are hashed once and shingle hashes derive from word hashes
+by vectorized arithmetic (``hash_shingles_from_word_hashes``) instead of
+re-hashing every shingle string — measured 2.2 → 1.3 ms/doc-core vs the
+former per-detector UDF chains. This is the scale path (10^12 docs: the
+signature pass is the dominant map-side cost).
 
 Semantics: shingle *identity* (and hence exact-Jaccard verification,
 minhash banding, simhash folding) is preserved — equal word sequences map
-to equal hashes. The hash family differs from the standalone operators'
-string-FNV (reference-parity simhash stays in operators/simhash.py), so
-signatures are not byte-identical across the two paths; verified pair
-sets agree up to 64-bit collisions (~1e-14/pair).
+to equal hashes, up to 64-bit collisions (~1e-14/pair). The one signer
+outside this module is SimHash's reference-parity ``hash_fn="python"``
+(string FNV over each gram, operators/simhash.py).
 """
 
 from __future__ import annotations
+
+from typing import TYPE_CHECKING
 
 import numpy as np
 import pandas as pd
@@ -44,62 +45,73 @@ from ..functions.hashing import (
     winnow,
 )
 from ..functions.text import py_words
-from .minhash import MinHashConfig
-from .simhash import SimHashConfig
-from .substring import SubstringConfig
 
-SIG_SCHEMA = T.StructType(
-    [
-        T.StructField("shingle_hashes", T.ArrayType(T.LongType())),
-        T.StructField("minhash_sig", T.ArrayType(T.LongType())),
-        T.StructField("simhash", T.LongType()),
-        T.StructField("fingerprints", T.ArrayType(T.LongType())),
-    ]
-)
+if TYPE_CHECKING:  # the detector modules import this one
+    from .minhash import MinHashConfig
+    from .simhash import SimHashConfig
+    from .substring import SubstringConfig
+
+_LONGS = T.ArrayType(T.LongType())
 
 
 def unified_signature_udf(
-    mh: MinHashConfig, sh: SimHashConfig, sub: SubstringConfig
+    mh: MinHashConfig | None = None,
+    sh: SimHashConfig | None = None,
+    sub: SubstringConfig | None = None,
 ):
-    a, b = minhash_params(mh.num_perm, mh.seed)
-    mh_n, sh_n = mh.shingle_n, sh.gram_n
-    k, w = sub.k, sub.w
+    """pandas UDF text → struct of the given configs' signature columns:
+    ``shingle_hashes`` + ``minhash_sig`` (mh), ``simhash`` (sh),
+    ``fingerprints`` (sub)."""
+    fields = []
+    if mh is not None:
+        a, b = minhash_params(mh.num_perm, mh.seed)
+        mh_n = mh.shingle_n
+        fields += [T.StructField("shingle_hashes", _LONGS), T.StructField("minhash_sig", _LONGS)]
+    if sh is not None:
+        sh_n = sh.gram_n
+        fields.append(T.StructField("simhash", T.LongType()))
+    if sub is not None:
+        k, w = sub.k, sub.w
+        fields.append(T.StructField("fingerprints", _LONGS))
+    use_mh, use_sh, use_sub = mh is not None, sh is not None, sub is not None
+    names = [f.name for f in fields]
 
-    @F.pandas_udf(SIG_SCHEMA)
+    @F.pandas_udf(T.StructType(fields))
     def sign_all(texts: pd.Series) -> pd.DataFrame:
         sh_hashes, mh_sigs, sh_sigs, fps = [], [], [], []
         for t in texts:
-            wh = fnv1a64_strings(py_words(t))
-            tri_h = hash_shingles_from_word_hashes(wh, mh_n)
-            sh_hashes.append(to_i64(tri_h))
-            mh_sigs.append(to_i64(minhash_signature(tri_h, a, b)))
-            bi_h = hash_shingles_from_word_hashes(wh, sh_n)
-            sh_sigs.append(np.int64(np.uint64(simhash64(bi_h))))
-            fps.append(to_i64(winnow(t if t is not None else "", k, w)))
-        return pd.DataFrame(
-            {
-                "shingle_hashes": sh_hashes,
-                "minhash_sig": mh_sigs,
-                "simhash": sh_sigs,
-                "fingerprints": fps,
-            }
-        )
+            if use_mh or use_sh:
+                wh = fnv1a64_strings(py_words(t))
+            if use_mh:
+                tri_h = hash_shingles_from_word_hashes(wh, mh_n)
+                sh_hashes.append(to_i64(tri_h))
+                mh_sigs.append(to_i64(minhash_signature(tri_h, a, b)))
+            if use_sh:
+                bi_h = hash_shingles_from_word_hashes(wh, sh_n)
+                sh_sigs.append(np.int64(np.uint64(simhash64(bi_h))))
+            if use_sub:
+                fps.append(to_i64(winnow(t if t is not None else "", k, w)))
+        cols = {
+            "shingle_hashes": sh_hashes,
+            "minhash_sig": mh_sigs,
+            "simhash": sh_sigs,
+            "fingerprints": fps,
+        }
+        return pd.DataFrame({n: cols[n] for n in names})
 
     return sign_all
 
 
 def add_all_signatures(
     df: DataFrame,
-    mh: MinHashConfig,
-    sh: SimHashConfig,
-    sub: SubstringConfig,
+    mh: MinHashConfig | None = None,
+    sh: SimHashConfig | None = None,
+    sub: SubstringConfig | None = None,
     text_col: str = "text",
 ) -> DataFrame:
-    packed = df.withColumn("_sig", unified_signature_udf(mh, sh, sub)(F.col(text_col)))
+    """``df`` plus the signature columns of every config that is not None."""
+    sign_all = unified_signature_udf(mh, sh, sub)
+    packed = df.withColumn("_sig", sign_all(F.col(text_col)))
     return packed.select(
-        "*",
-        F.col("_sig.shingle_hashes").alias("shingle_hashes"),
-        F.col("_sig.minhash_sig").alias("minhash_sig"),
-        F.col("_sig.simhash").alias("simhash"),
-        F.col("_sig.fingerprints").alias("fingerprints"),
+        "*", *[F.col(f"_sig.{n}").alias(n) for n in sign_all.returnType.fieldNames()]
     ).drop("_sig")

@@ -12,9 +12,11 @@ Algorithmic parity with the reference's simhash pass
 - verification: popcount(sig1 XOR sig2) ≤ k (dif, :179-180) — in Spark a
   built-in: bit_count(xor) (SURVEY.md §2.3).
 
-The fold runs as one Arrow-batched pandas UDF; within a batch ALL grams of
-all docs are hashed through one padded byte-matrix FNV pass and the bit
-counts reduce per-doc via np.add.reduceat — no per-gram Python loop.
+The default ``hash_fn="wordhash"`` signs through the shared signing pass
+(operators/signatures.py — the pipeline's sign-stage kernels): each word is
+FNV-hashed once, gram hashes derive from word hashes, and the bit-majority
+fold (``simhash64``) runs per doc on exact int64 bit counts. The
+reference-parity ``hash_fn="python"`` signer FNV-hashes each gram string.
 
 Scale note (10^12 docs): 8-bit block keys collide at rate 1/256, so the
 naive candidate join is quadratic at web scale. Controls, in order:
@@ -35,19 +37,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.hashing import (
-    fnv1a64_strings,
-    hash_shingles_from_word_hashes,
-    simhash64,
-)
+from ..functions.hashing import fnv1a64_strings, simhash64
 from ..functions.partitioning import spread_small_input
-from ..functions.text import char_ngrams, py_word_shingles, py_words, word_shingles
+from ..functions.text import py_word_shingles
 from .joins import grouped_pairs
+from .signatures import add_all_signatures
 
 
 @dataclass
 class SimHashConfig:
-    feature: str = "word"  # "word": distinct word n-grams; "char": char n-grams
     # word BIgrams by default: unigram sets collapse on narrow vocabularies
     # (every doc ≈ the whole vocab ⇒ hamming ≈ 0 between unrelated docs),
     # while bigrams keep near-dup pairs ≤ k and random pairs far above it
@@ -64,16 +62,14 @@ class SimHashConfig:
     # probabilistic.
     multi_probe: bool = False
     max_bucket_size: int | None = 25000
-    # "wordhash" (default, word features only): FNV-hash each word once,
-    # derive gram hashes from word hashes by vector arithmetic
-    # (functions/hashing.hash_shingles_from_word_hashes — the unified
-    # sign-stage kernel, ~45× cheaper than string-FNV over every gram).
-    # Signature VALUES differ from the string-FNV family but the Hamming
-    # structure is the same (equal word sequences ⇒ equal feature hashes).
-    # "python": gram strings built + FNV-1a-hashed in-UDF — bit-parity with
-    # the reference's hash choice (simhash_components_disk_v3.py:159-177).
-    # "catalyst-xxhash64": grams + hashes as JVM expressions, UDF folds longs.
-    # "catalyst-fnv1a": gram strings built JVM-side, hashed in-UDF.
+    # "wordhash" (default): the shared signing pass — FNV-hash each word
+    # once, derive gram hashes from word hashes by vector arithmetic
+    # (functions/hashing.hash_shingles_from_word_hashes, ~45× cheaper than
+    # string-FNV over every gram). Signature VALUES differ from the
+    # string-FNV family but the Hamming structure is the same (equal word
+    # sequences ⇒ equal feature hashes).
+    # "python": gram strings built + FNV-1a-hashed per doc — bit-parity
+    # with the reference's hash choice (simhash_components_disk_v3.py:159-177).
     hash_fn: str = "wordhash"
 
     @property
@@ -89,100 +85,23 @@ class SimHashConfig:
         return self.hamming_k < self.bands
 
 
-def _fold_hash_matrix(list_of_hash_arrays: list[np.ndarray]) -> np.ndarray:
-    """Per-doc bit-majority fold (simhash64 per row).
-
-    Deliberately NOT a whole-batch unpackbits+reduceat: reduceat on the
-    uint8 bit matrix silently wraps at 256 grams, and the 20MB-per-batch
-    bit matrix churns memory across 32 concurrent workers. The per-doc
-    fold is exact (int64 sums), allocates ~30KB at a time, and is plenty
-    fast (~60µs/doc)."""
-    out = np.empty(len(list_of_hash_arrays), dtype=np.uint64)
-    for i, a in enumerate(list_of_hash_arrays):
-        out[i] = simhash64(np.asarray(a, dtype=np.uint64))
-    return out
-
-
-def simhash_fold_udf(hash_fn: str = "xxhash64"):
-    """pandas UDF folding per-gram hashes into a 64-bit simhash signature.
-
-    xxhash64 mode receives array<long> (grams hashed JVM-side); fnv1a mode
-    receives array<string> and hashes in-UDF (reference hash parity). The
-    fold itself is one unpackbits + np.add.reduceat per Arrow batch.
-    """
-
-    if hash_fn == "fnv1a":
-
-        @F.pandas_udf(T.LongType())
-        def fold_strings(grams: pd.Series) -> pd.Series:
-            lists = [list(g) if g is not None else [] for g in grams]
-            arrays = [fnv1a64_strings(g) for g in lists]
-            return pd.Series(_fold_hash_matrix(arrays).view(np.int64))
-
-        return fold_strings
+def add_simhash(df: DataFrame, cfg: SimHashConfig, text_col: str = "text") -> DataFrame:
+    """``df`` plus a 64-bit ``simhash`` column over distinct word n-grams —
+    the reference's simhash also hashes word/field features, not raw
+    character windows (simhash_components_disk_v3.py hashes representation
+    feature strings)."""
+    if cfg.hash_fn == "wordhash":
+        return add_all_signatures(df, sh=cfg, text_col=text_col)
+    if cfg.hash_fn != "python":
+        raise ValueError(f"unknown SimHashConfig.hash_fn {cfg.hash_fn!r}")
+    n = cfg.gram_n
 
     @F.pandas_udf(T.LongType())
-    def fold_hashes(hashes: pd.Series) -> pd.Series:
-        arrays = [
-            np.asarray(h, dtype=np.int64).view(np.uint64) if h is not None else np.empty(0, np.uint64)
-            for h in hashes
-        ]
-        return pd.Series(_fold_hash_matrix(arrays).view(np.int64))
+    def sign_text(texts: pd.Series) -> pd.Series:
+        sigs = [simhash64(fnv1a64_strings(py_word_shingles(t, n))) for t in texts]
+        return pd.Series(np.array(sigs, dtype=np.uint64).view(np.int64))
 
-    return fold_hashes
-
-
-def add_simhash(
-    df: DataFrame, cfg: SimHashConfig, text_col: str = "text", out_col: str = "simhash"
-) -> DataFrame:
-    """Word-level features by default: the reference's simhash also hashes
-    word/field features, not raw character windows
-    (simhash_components_disk_v3.py hashes representation feature strings).
-    Char-gram mode kept for char-noise-dominated corpora — but note that on
-    narrow-vocabulary text the char-gram *set* of unrelated documents
-    largely coincides, which makes char-gram simhash collide at k=7."""
-    if cfg.hash_fn == "wordhash" and cfg.feature == "word":
-        n = cfg.gram_n
-
-        @F.pandas_udf(T.LongType())
-        def sign_wordhash(texts: pd.Series) -> pd.Series:
-            out = np.empty(len(texts), dtype=np.uint64)
-            for i, t in enumerate(texts):
-                wh = fnv1a64_strings(py_words(t))
-                out[i] = simhash64(hash_shingles_from_word_hashes(wh, n))
-            return pd.Series(out.view(np.int64))
-
-        return df.withColumn(out_col, sign_wordhash(F.col(text_col)))
-
-    if cfg.hash_fn in ("python", "wordhash"):
-        n, feature = cfg.gram_n, cfg.feature
-
-        @F.pandas_udf(T.LongType())
-        def sign_text(texts: pd.Series) -> pd.Series:
-            arrays = []
-            for t in texts:
-                if feature == "word":
-                    grams = py_word_shingles(t, n)
-                else:
-                    low = (t or "").lower()
-                    grams = (
-                        list(dict.fromkeys(low[i : i + n] for i in range(len(low) - n + 1)))
-                        if len(low) > n
-                        else [low]
-                    )
-                arrays.append(fnv1a64_strings(grams))
-            return pd.Series(_fold_hash_matrix(arrays).view(np.int64))
-
-        return df.withColumn(out_col, sign_text(F.col(text_col)))
-
-    if cfg.feature == "word":
-        grams = word_shingles(text_col, cfg.gram_n)
-    else:
-        grams = char_ngrams(text_col, cfg.gram_n)
-    if cfg.hash_fn == "catalyst-fnv1a":
-        return df.withColumn(out_col, simhash_fold_udf("fnv1a")(grams))
-    gram_hashes = F.transform(grams, lambda s: F.xxhash64(s))
-    return df.withColumn(out_col, simhash_fold_udf("xxhash64")(gram_hashes))
+    return df.withColumn("simhash", sign_text(F.col(text_col)))
 
 
 def block_postings(

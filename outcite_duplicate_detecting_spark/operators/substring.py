@@ -8,7 +8,8 @@ distributed design here replaces a global suffix array with **winnowing**
 
 1. per doc, rolling k-gram hashes over the UTF-8 bytes, windowed minima
    (window w, rightmost tie-break) → a sparse fingerprint set, ~2/(w+1)
-   density — computed in one Arrow-batched pandas UDF, no shuffle;
+   density — computed in the shared Arrow-batched signing pass
+   (operators/signatures.py), no shuffle;
 2. candidates via the MIN-FINGERPRINT containment join: the query side
    posts ONE row per doc (its global-minimum fingerprint) against the
    index side's full winnow set. This is asymmetric on purpose —
@@ -45,14 +46,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..functions.hashing import to_i64, winnow
 from ..functions.partitioning import spread_small_input
 from .joins import band_candidate_pairs
+from .signatures import add_all_signatures
 
 
 @dataclass
@@ -71,22 +70,6 @@ class SubstringConfig:
     @property
     def guarantee_t(self) -> int:
         return self.w + self.k - 1
-
-
-def fingerprint_udf(cfg: SubstringConfig):
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def fp(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [to_i64(winnow(t if t is not None else "", cfg.k, cfg.w)).tolist() for t in texts]
-        )
-
-    return fp
-
-
-def add_fingerprints(
-    df: DataFrame, cfg: SubstringConfig, text_col: str = "text", out_col: str = "fingerprints"
-) -> DataFrame:
-    return df.withColumn(out_col, fingerprint_udf(cfg)(F.col(text_col)))
 
 
 def substring_pairs(
@@ -124,7 +107,7 @@ def substring_pairs(
     # fingerprints on ONE core), so the input is spread first — no-op at
     # real scale.
     fparr = (
-        add_fingerprints(spread_small_input(base, key="id"), cfg)
+        add_all_signatures(spread_small_input(base, key="id"), sub=cfg)
         .select("id", F.length("text").alias("n_chars"), "fingerprints")
         .localCheckpoint(eager=True)
     )

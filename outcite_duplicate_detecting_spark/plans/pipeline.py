@@ -32,12 +32,12 @@ Scale design (10^12 docs, 1000 executors):
 - CC rounds localCheckpoint to keep plans flat; edges are a tiny fraction
   of corpus size after verification,
 - doc ids are xxhash64(url, warc_ts) longs by default;
-  ``PipelineConfig(id_bits=128)`` switches every id to a dual-salt
-  struct<h1,h2> — collision-free in practice at 10^12 urls, where 64-bit
-  ids expect ~10^4 birthday collisions (each a silent over-merge). The
-  whole dataflow is id-type-agnostic, so the flag is the only change; the
-  cost is measured at +43% (struct keys lose radix-sort/codegen fast
-  paths), which is why longs stay the default below ~10^9 docs.
+  ``PipelineConfig(id_bits=128)`` switches every id to a 16-byte binary
+  key of two differently-salted xxhash64 values — collision-free in
+  practice at 10^12 urls, where 64-bit ids expect ~10^4 birthday
+  collisions (each a silent over-merge). The whole dataflow is
+  id-type-agnostic, so the flag is the only change; the flat key measured
+  at parity with longs (r6, 400k docs / 8 cores).
 """
 
 from __future__ import annotations
@@ -83,39 +83,18 @@ class PipelineConfig:
         default_factory=lambda: SimHashConfig(bits_per_band=16, multi_probe=True)
     )
     substring: SubstringConfig = field(default_factory=SubstringConfig)
-    use_minhash: bool = True
-    use_simhash: bool = True
-    use_substring: bool = True
     min_text_chars: int = 1  # drop empty texts from pairwise detectors
-    # run detector stages concurrently (overlaps their serialized tails);
-    # 0 → one thread per detector, 1 → sequential
-    detector_threads: int = 0
-    # durable per-stage parquet checkpoints + lineage manifests (the
-    # north-rule resumability path). False → "light" mode: stage boundaries
-    # become lazy localCheckpoints (materialized on first use, reused after)
-    # — no disk round-trips, no resume; used by throughput benchmarking
-    # where the 7 write+read barriers would serialize the run.
-    checkpoint_stages: bool = True
-    # 64 (default): single xxhash64 long ids. 128: struct<h1,h2> of two
-    # independently-salted xxhash64 values — collision-free in practice at
-    # 10^12 urls, where 64-bit ids expect ~10^4 birthday collisions (each
-    # a silent cluster over-merge). The 128-bit path is fully supported
-    # (CC, writeback, expand are id-type-agnostic; clustering parity is
-    # pytest-pinned) but MEASURED +43% end-to-end at 800k docs/8 cores
-    # (611.7s vs 428.1s, back-to-back A/B): struct keys lose radix
-    # sort/codegen fast paths in every band-join, distinct, and exchange.
-    # Below ~10^9 docs the collision risk is nil, so the fast long ids are
-    # the default; set id_bits=128 for 10^11+ deployments where the
-    # birthday bound bites.
+    # 64 (default): single xxhash64 long ids. 128: a 16-byte binary key of
+    # two independently-salted xxhash64 values — collision-free in practice
+    # at 10^12 urls, where 64-bit ids expect ~10^4 birthday collisions (each
+    # a silent cluster over-merge). CC, writeback and expand are
+    # id-type-agnostic; clustering parity with 64-bit ids is pytest-pinned.
+    # The r6 interleaved A/B at 400k docs / 8 cores (min of 2 per mode)
+    # measured longs 137.4 s vs binary 134.4 s — parity within window
+    # noise, since one flat comparable value keeps the radix-sort/codegen
+    # fast paths. Set id_bits=128 for 10^11+ deployments where the birthday
+    # bound bites.
     id_bits: int = 64
-    # 128-bit id representation: "binary" (default — 16-byte key via
-    # hex/unhex packing, one flat comparable value) or "struct"
-    # (struct<h1,h2> — the r4 path). The r6 interleaved A/B at 400k docs
-    # / 8 cores (tools/probe_modes.py, min of 2 per mode) measured:
-    # longs 137.4 s, struct 158.1 s (+15%), binary 134.4 s (parity,
-    # within window noise) — the flat key recovers the radix-sort/codegen
-    # fast paths struct loses, so 128-bit deployments pay ~nothing.
-    id_pack: str = "binary"
 
     def fingerprint(self) -> str:
         return hashlib.sha1(
@@ -126,19 +105,17 @@ class PipelineConfig:
 def _doc_id_expr(cfg: PipelineConfig, id_cols: list[str]):
     """Deterministic doc id from the natural key. 128-bit mode pairs two
     xxhash64 values under different salts (Spark's xxhash64 seed is fixed,
-    so the salt literal supplies the second hash family). Representation
-    per cfg.id_pack: struct<h1,h2>, or a 16-byte binary key — big-endian
-    two's-complement halves via hex/unhex (ANSI mode forbids a direct
-    long→binary cast), unsigned-lexicographic comparable, one flat value
-    through every downstream join/sort/group (CC included — ids only ever
-    need equality and a deterministic total order, not numeric meaning)."""
+    so the salt literal supplies the second hash family) in a 16-byte
+    binary key — big-endian two's-complement halves via hex/unhex (ANSI
+    mode forbids a direct long→binary cast), unsigned-lexicographic
+    comparable, one flat value through every downstream join/sort/group
+    (CC included — ids only ever need equality and a deterministic total
+    order, not numeric meaning)."""
     if cfg.id_bits == 128:
         h1 = F.xxhash64(*id_cols)
         h2 = F.xxhash64(F.lit("docid-salt-2"), *id_cols)
-        if cfg.id_pack == "binary":
-            pack = lambda h: F.lpad(F.hex(h), 16, "0")  # noqa: E731
-            return F.unhex(F.concat(pack(h1), pack(h2))).alias("doc_id")
-        return F.struct(h1.alias("h1"), h2.alias("h2")).alias("doc_id")
+        pack = lambda h: F.lpad(F.hex(h), 16, "0")  # noqa: E731
+        return F.unhex(F.concat(pack(h1), pack(h2))).alias("doc_id")
     return F.xxhash64(*id_cols).alias("doc_id")
 
 
@@ -166,12 +143,8 @@ def dedup_pipeline(
     in_fp = input_fingerprint or f"volatile-{run_id}-{uuid.uuid4().hex}"
     cfg_fp = cfg.fingerprint()
 
-    def stage(name: str, compute, extra_cfg: str = "") -> tuple[DataFrame, bool]:
-        if not cfg.checkpoint_stages:
-            return compute().localCheckpoint(eager=False), False
-        return run_stage(
-            spark, workdir, name, in_fp, cfg_fp + extra_cfg, compute, run_id=run_id
-        )
+    def stage(name: str, compute) -> tuple[DataFrame, bool]:
+        return run_stage(spark, workdir, name, in_fp, cfg_fp, compute, run_id=run_id)
 
     # --- collapse: byte-identical texts → one representative. This is the
     # ONLY stage that shuffles the text column (the reference analogue:
@@ -233,16 +206,6 @@ def dedup_pipeline(
             .where(F.length("text") >= cfg.min_text_chars)
             .repartition(n_parts, "rep_id")
         )
-        if not cfg.checkpoint_stages:
-            # light mode: materialize once for the sign stage + substring
-            # verify. In checkpoint mode `collapsed` is already parquet-backed,
-            # so consumers re-read the (cheap, columnar) checkpoint instead of
-            # pinning the corpus text as block-manager RDD blocks for the whole
-            # detector phase — localCheckpoint blocks are evictable under the
-            # concurrent detectors' execution-memory pressure, and a "checkpoint
-            # block not found" then kills the job (observed at 800k docs on a
-            # 2-core leg)
-            reps = reps.localCheckpoint(eager=True)
 
         # --- sign: ONE Arrow pass computes every detector's signature
         # (operators/signatures.py): one text transfer, one shingling, one
@@ -270,10 +233,6 @@ def dedup_pipeline(
             )
 
         signed, _ = stage("sign", _sign)
-        if not cfg.checkpoint_stages:
-            # light mode returns a LAZY checkpoint; force one materialization
-            # before three concurrent consumers race to compute it
-            signed.count()
 
         # --- candidate joins + verification, one per detector; these are
         # independent given `signed`, so their stage jobs run concurrently —
@@ -337,36 +296,14 @@ def dedup_pipeline(
             )
             return containment_verify(cands.pairs, base, cfg.substring.min_len)
 
-        detector_work: list[tuple[str, object, object]] = []
-        if cfg.use_minhash:
-            detector_work.append(
-                ("minhash", _minhash, lambda df: df.select("id1", "id2"))
-            )
-        if cfg.use_simhash:
-            detector_work.append(
-                ("simhash", _simhash, lambda df: df.select("id1", "id2"))
-            )
-        if cfg.use_substring:
-            detector_work.append(
-                (
-                    "substring",
-                    _substring,
-                    lambda df: df.select(
-                        F.col("inner_id").alias("id1"), F.col("outer_id").alias("id2")
-                    ),
-                )
-            )
-
-        edge_frames: list[DataFrame] = []
-        n_threads = cfg.detector_threads or max(len(detector_work), 1)
-        with ThreadPoolExecutor(max_workers=n_threads) as pool:
+        with ThreadPoolExecutor(max_workers=3) as pool:
             futures = [
-                (post, pool.submit(stage, name, compute))
-                for name, compute, post in detector_work
+                pool.submit(stage, name, compute)
+                for name, compute in (
+                    ("minhash", _minhash), ("simhash", _simhash), ("substring", _substring)
+                )
             ]
-            for post, fut in futures:
-                df, _resumed = fut.result()
-                edge_frames.append(post(df))
+            (mh_pairs, _), (sh_pairs, _), (sub_pairs, _) = [f.result() for f in futures]
 
         def _components() -> DataFrame:
             # node set from `signed` (same rep rows as reps, by construction):
@@ -374,11 +311,15 @@ def dedup_pipeline(
             # where `reps` would re-read collapse text for the length filter
             # and re-run its repartition shuffle just to list ids
             node_ids = signed.select(F.col("rep_id").alias("id"))
-            if not edge_frames:
-                return node_ids.select("id", F.col("id").alias("component"))
-            edges = edge_frames[0]
-            for e in edge_frames[1:]:
-                edges = edges.unionByName(e)
+            edges = (
+                mh_pairs.select("id1", "id2")
+                .unionByName(sh_pairs.select("id1", "id2"))
+                .unionByName(
+                    sub_pairs.select(
+                        F.col("inner_id").alias("id1"), F.col("outer_id").alias("id2")
+                    )
+                )
+            )
             return connected_components(
                 edges, src="id1", dst="id2", nodes=node_ids
             )
@@ -443,8 +384,6 @@ def dedup_pipeline_full(
     cfg_fp = cfg.fingerprint()
 
     def stage(name: str, compute) -> tuple[DataFrame, bool]:
-        if not cfg.checkpoint_stages:
-            return compute().localCheckpoint(eager=False), False
         return run_stage(spark, workdir, name, in_fp, cfg_fp, compute, run_id=run_id)
 
     id_cols = ["url", "warc_ts"] if "warc_ts" in pages.columns else ["url"]

@@ -52,7 +52,7 @@ def build_duplicates_table(
     )
     # min_by over (−length, id): longest text wins, ties → smallest id.
     # Ascending id comparison works for ANY orderable id type (long ids,
-    # 128-bit struct ids) — a negated-id max_by would not.
+    # 128-bit binary ids) — a negated-id max_by would not.
     order_key = F.struct(
         (-F.length(text_col)).alias("l"), F.col(id_col).alias("i")
     )

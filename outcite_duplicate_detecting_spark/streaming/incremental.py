@@ -10,11 +10,11 @@ The reference's incrementality is flag-based rescanning
   but set-based instead of per-doc flags).
 - ``stream_signatures``: Structured Streaming — readStream over the input
   directory with ``Trigger.AvailableNow``, per-row signature computation
-  (the same pandas UDFs as batch — code reuse is total since signatures are
-  map-side), ``foreachBatch`` writing signature snapshots. Candidate joins
-  and CC stay batch jobs over the accumulated signature table: pair
-  generation is a set operation, not a per-event one — the standard
-  lambda-ish split for dedup at scale.
+  (the same signing pass as batch, operators/signatures.py — code reuse
+  is total since signatures are map-side), ``foreachBatch`` writing
+  signature snapshots. Candidate joins and CC stay batch jobs over the
+  accumulated signature table: pair generation is a set operation, not a
+  per-event one — the standard lambda-ish split for dedup at scale.
 """
 
 from __future__ import annotations
@@ -22,7 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.minhash import MinHashConfig, add_signature
+from ..operators.minhash import MinHashConfig
+from ..operators.signatures import add_all_signatures
 
 
 def incremental_new_rows(
@@ -44,10 +45,8 @@ def stream_signatures(
     parquet signature table. Returns the StreamingQuery (caller awaits)."""
     cfg = cfg or MinHashConfig()
     stream = spark.readStream.schema(schema).parquet(input_dir)
-    signed = add_signature(
-        stream.select("url", "text").withColumn("doc_id", F.xxhash64("url")),
-        cfg,
-        text_col="text",
+    signed = add_all_signatures(
+        stream.select("url", "text").withColumn("doc_id", F.xxhash64("url")), cfg
     ).select("url", "doc_id", "minhash_sig")
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:

@@ -156,30 +156,33 @@ def test_simhash_pigeonhole_exact_wordhash_default(spark, corpus):
     assert got == want
 
 
-def test_simhash_pigeonhole_exact_xxhash(spark, corpus):
-    """catalyst-xxhash64 mode: the band join finds exactly the ≤k pairs of
-    the signatures it computed (pigeonhole), and signatures are stable."""
-    pdf, df = corpus
-    cfg = SimHashConfig(hamming_k=7, hash_fn="catalyst-xxhash64")
-    from outcite_duplicate_detecting_spark.operators.simhash import add_simhash
+def test_add_all_signatures_each_config_alone_matches_pipeline(spark, corpus):
+    """Standalone detectors sign exactly like the pipeline: each config
+    passed alone to the one signing UDF returns only its own columns, equal
+    row for row to the three-config call the pipeline's sign stage makes."""
+    from outcite_duplicate_detecting_spark.operators.signatures import add_all_signatures
+    from outcite_duplicate_detecting_spark.plans.pipeline import PipelineConfig
 
-    sigs = {
-        r["doc_id"]: r["simhash"]
-        for r in add_simhash(
-            df.select("doc_id", "text"), cfg
-        ).select("doc_id", "simhash").collect()
-    }
-    ids = sorted(sigs)
-    want = {
-        (a, b)
-        for i, a in enumerate(ids)
-        for b in ids[i + 1 :]
-        if bin((sigs[a] ^ sigs[b]) & (2**64 - 1)).count("1") <= 7
-    }
-    verified, drops = simhash_pairs(df, cfg)
-    got = {(r["id1"], r["id2"]) for r in verified.collect()}
-    assert drops.count() == 0
-    assert got == want
+    _, df = corpus
+    base = df.select("doc_id", "text")
+    cfg = PipelineConfig()
+    full = add_all_signatures(base, cfg.minhash, cfg.simhash, cfg.substring)
+    assert full.columns == [
+        "doc_id", "text", "shingle_hashes", "minhash_sig", "simhash", "fingerprints"
+    ]
+
+    def rows(signed, cols):
+        return {r["doc_id"]: tuple(r[c] for c in cols) for r in signed.collect()}
+
+    for alone, cols in [
+        (add_all_signatures(base, cfg.minhash), ["shingle_hashes", "minhash_sig"]),
+        (add_all_signatures(base, sh=cfg.simhash), ["simhash"]),
+        (add_all_signatures(base, sub=cfg.substring), ["fingerprints"]),
+    ]:
+        assert alone.columns == ["doc_id", "text", *cols]
+        got = rows(alone, cols)
+        assert len(got) == base.count()
+        assert got == rows(full, cols)
 
 
 def brute_containment_pairs(pdf, min_len=50):

@@ -133,18 +133,16 @@ def test_pipeline_simhash_config_covers_hamming_tail(spark):
     assert want <= got  # every planted 4..7 pair caught — exact tail coverage
 
 
-@pytest.mark.parametrize("pack,dtype_prefix", [("struct", "struct"), ("binary", "binary")])
-def test_pipeline_id_bits_128_matches_64_clustering(spark, run, tmp_path, pack, dtype_prefix):
-    """id_bits=128 (collision-safe ids for 10^11+ corpora) in BOTH
-    representations — struct<h1,h2> and the flat 16-byte binary key — must
-    produce the same PARTITION of urls into clusters as the long-id
+def test_pipeline_id_bits_128_matches_64_clustering(spark, run, tmp_path):
+    """id_bits=128 (collision-safe 16-byte binary ids for 10^11+ corpora)
+    must produce the same PARTITION of urls into clusters as the long-id
     default (ids are internal — only the grouping is semantics). This is
     the pytest pin that keeps the 128-bit path one flag away."""
     pages, gold, out, _ = run
-    cfg = PipelineConfig(id_bits=128, id_pack=pack)
-    out128 = dedup_pipeline(spark, pages, cfg, workdir=str(tmp_path / pack),
-                            input_fingerprint="corpus-11", run_id=f"r128{pack}")
-    assert dict(out128.dtypes)["cluster_id"].startswith(dtype_prefix)
+    cfg = PipelineConfig(id_bits=128)
+    out128 = dedup_pipeline(spark, pages, cfg, workdir=str(tmp_path / "id128"),
+                            input_fingerprint="corpus-11", run_id="r128")
+    assert dict(out128.dtypes)["cluster_id"] == "binary"
     assert dict(out.dtypes)["cluster_id"] == "bigint"
     def cid(r):  # binary ids collect as (unhashable) bytearray
         v = r["cluster_id"]

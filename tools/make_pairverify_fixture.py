@@ -15,7 +15,8 @@ here in DuckDB directly against the sf parquet — no Spark needed. Rows are
 sorted and deduped, so the fixture bytes are deterministic.
 
 Usage: python tools/make_pairverify_fixture.py [sf_dir ...]
-Defaults to sf0.001 + sf0.01 (the pytest and driver correctness scales).
+Defaults to sf0.001 + sf0.01 + sf0.1 (the pytest, driver-correctness and
+bench scales), so ``tools/check_oracles.py`` holds at each of them.
 """
 
 from __future__ import annotations
@@ -32,7 +33,9 @@ import pyarrow.parquet as pq
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-DEFAULT_SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
+DEFAULT_SF_DIRS = [
+    "/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"
+]
 OUT = os.path.join(REPO, "fixtures", "pairverify_overlaps.parquet")
 
 

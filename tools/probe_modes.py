@@ -1,11 +1,13 @@
-"""Interleaved checkpoint-vs-light A/B probe at fixed core counts.
+"""Interleaved 64-bit vs 128-bit doc-id A/B probe at fixed core counts.
 
 Usage: python tools/probe_modes.py <n_docs> <mode:cores[:mem]> [...]
-e.g.   python tools/probe_modes.py 800000 light:8 ckpt:8:64g light:8 ckpt:8
+e.g.   python tools/probe_modes.py 800000 id64:8 id128:8:64g id64:8 id128:8
 
-One corpus, one leg per fresh pinned JVM, legs run in the given order —
-interleaving distinguishes the host's sporadic ~2x slow state (hits one
-leg) from a real mode pathology (hits every leg of that mode).
+Modes: id64 (xxhash64 long ids, the default) and id128 (16-byte binary
+ids, ``PipelineConfig(id_bits=128)``). One corpus, one leg per fresh
+pinned JVM, legs run in the given order — interleaving distinguishes the
+host's sporadic ~2x slow state (hits one leg) from a real mode pathology
+(hits every leg of that mode).
 """
 
 from __future__ import annotations
@@ -26,15 +28,8 @@ from outcite_duplicate_detecting_spark.session import get_spark
 from outcite_duplicate_detecting_spark.plans.pipeline import PipelineConfig, dedup_pipeline
 
 cores = int(sys.argv[1]); corpus = sys.argv[2]; workdir = sys.argv[3]
-mode = sys.argv[4]  # light | ckpt | ckpt64 | id128 | id128b
-cfg = PipelineConfig(checkpoint_stages=mode != "light")
-if mode == "ckpt64":
-    cfg.id_bits = 64
-elif mode == "id128":
-    cfg.id_bits = 128  # struct<h1,h2> representation
-elif mode == "id128b":
-    cfg.id_bits = 128
-    cfg.id_pack = "binary"  # 16-byte flat binary key
+mode = sys.argv[4]  # id64 | id128
+cfg = PipelineConfig(id_bits={"id64": 64, "id128": 128}[mode])
 spark = get_spark(cores=cores, app_name=f"probe-{mode}-{cores}",
                   shuffle_partitions=32)
 pages = spark.read.parquet(corpus)
@@ -58,7 +53,7 @@ def main() -> None:
     from outcite_duplicate_detecting_spark.session import get_spark
     from outcite_duplicate_detecting_spark.sources.bench_corpus import generate_bench_pages
 
-    gen = get_spark(cores=32, app_name="probe-gen")
+    gen = get_spark(cores=len(os.sched_getaffinity(0)), app_name="probe-gen")
     generate_bench_pages(gen, n_docs, parts=64).write.mode("overwrite").parquet(corpus_dir)
     gen.stop()
 

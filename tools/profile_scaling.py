@@ -22,15 +22,14 @@ from outcite_duplicate_detecting_spark.session import get_spark
 from outcite_duplicate_detecting_spark.plans.pipeline import PipelineConfig, dedup_pipeline
 
 cores = int(sys.argv[1]); corpus = sys.argv[2]; workdir = sys.argv[3]
-light = len(sys.argv) > 4 and sys.argv[4] == "light"
 # mirror bench.py's scaling snippet exactly: data-sized shuffle
 # partitions, identical across legs
 spark = get_spark(cores=cores, app_name=f"profile-{cores}",
                   shuffle_partitions=32)
 pages = spark.read.parquet(corpus)
 t0 = time.time()
-out = dedup_pipeline(spark, pages, PipelineConfig(checkpoint_stages=not light),
-                     workdir=workdir, run_id=f"p{cores}")
+out = dedup_pipeline(spark, pages, PipelineConfig(), workdir=workdir,
+                     run_id=f"p{cores}")
 t1 = time.time()
 n = out.count()
 dups = out.where(out.is_duplicate).count()
@@ -44,8 +43,7 @@ spark.stop()
 
 
 def main() -> None:
-    light = "light" in sys.argv
-    args = [a for a in sys.argv[1:] if a != "light"]
+    args = sys.argv[1:]
     n_docs = int(args[0]) if args else 60000
     core_list = [int(c) for c in args[1:]] or [8, 32]
 
@@ -54,7 +52,7 @@ def main() -> None:
     from outcite_duplicate_detecting_spark.session import get_spark
     from outcite_duplicate_detecting_spark.sources.bench_corpus import generate_bench_pages
 
-    gen = get_spark(cores=32, app_name="profile-gen")
+    gen = get_spark(cores=len(os.sched_getaffinity(0)), app_name="profile-gen")
     generate_bench_pages(gen, n_docs, parts=64).write.mode("overwrite").parquet(corpus_dir)
     gen.stop()
 
@@ -69,7 +67,7 @@ def main() -> None:
         pin = ["taskset", "-c", f"0-{cores - 1}"] if _sh.which("taskset") else []
         proc = subprocess.run(
             pin + [sys.executable, "-c", SNIPPET.replace("__REPO__", REPO), str(cores),
-             corpus_dir, workdir] + (["light"] if light else []),
+             corpus_dir, workdir],
             capture_output=True, text=True, timeout=5400, env=env,
         )
         print(f"--- cores={cores} ---")
