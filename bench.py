@@ -1,29 +1,26 @@
-"""Benchmark harness.
+"""Benchmark harness, sized to the host it runs on. After one bounded
+health gate (``wait_for_healthy_host``) it prints one JSON line twice:
+headline-only before the throughput legs (so a run cut during the legs
+still leaves a parsable line), then the full line, which adds
+``throughput``. Results also land in BENCH/BASELINE.md.
 
 1. Headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-   on local[$SPARK_GRAFT_CPUS]: per-query wall seconds via the noop sink
-   (forces full computation, no driver collect).
-2. Pipeline throughput + the north-rule scaling evidence: the full dedup
-   pipeline over an identical deterministic synthetic corpus at N and 4N
-   cores (default 2 vs 8), each run in a fresh JVM subprocess PINNED to
-   exactly its core budget with taskset. Pinning is what makes the
-   comparison honest: a pandas-UDF workload runs N JVM task threads PLUS
-   N python workers, so an unpinned local[N] on a 32-CPU box silently
-   consumes up to 2N cores — inflating the small-N baseline and capping
-   measurable speedup at ~2×. A cluster executor is a core-bounded
-   container; taskset reproduces that. The 2-vs-8 pair sits below this
-   machine's turbo/bandwidth ceiling (pure-numpy calibration: identical
-   tasks run 1.0× at 2→8 busy cores but 1.24× slower at 16+ busy cores),
-   so measured efficiency reflects the PIPELINE, not the silicon.
-   Results also land in BENCH/BASELINE.md.
-
-Prints ONE JSON line:
-  {"metric": "e2e_headline_queries", "value": <total sec>, "unit": "sec",
-   "queries": {...}, "sf": ..., "throughput": {...}}
+   on local[<CPUs in the affinity set>]: wall seconds through the noop sink
+   (full computation, no driver collect), two passes, min per query.
+2. Throughput: the dedup pipeline over $SPARK_GRAFT_BENCH_DOCS synthetic
+   pages at N and 4N cores (``plan_legs``), each leg a fresh JVM pinned
+   with taskset to the first N (4N) CPUs of the affinity set. Pinning
+   emulates a core-bounded executor: a pandas-UDF workload runs N JVM task
+   threads plus N python workers, so an unpinned local[N] borrows up to 2N
+   cores. Legs run big, small, big, small (one slow host window then hits
+   at most one attempt per leg); each leg reports its best attempt, and a
+   failed attempt gets one replacement. $SPARK_GRAFT_SKIP_SCALING=1 skips
+   the legs; so do fewer than 4 CPUs, with the reason recorded.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -31,480 +28,272 @@ import subprocess
 import sys
 import tempfile
 import time
+from concurrent.futures import ThreadPoolExecutor
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-# 400k docs: large enough that the constant ~20s serial tail (driver
-# barriers, AQE re-plans, CC rounds) is ~5% of the small leg — a real
-# 4N-executor cluster pays it identically — while keeping the detector
-# phase's shuffle working set small enough to stay page-cache-friendly.
-# 800k (round 3's size) measurably increased DRAM-bandwidth pressure in
-# the 8-busy-core leg on this host without changing what the ratio
-# measures; the knob stays env-tunable.
+# 400k docs: large enough that the constant serial tail (driver barriers,
+# AQE re-plans, CC rounds) is a small share of the small leg.
 BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "400000"))
 SKIP_SCALING = os.environ.get("SPARK_GRAFT_SKIP_SCALING", "") == "1"
-SCALE_N = int(os.environ.get("SPARK_GRAFT_SCALE_N", "2"))  # small leg; big = 4N
-# Pre-run health gate (see wait_for_healthy_host): max seconds to wait for a
-# healthy host window before starting the legs, and what "healthy" means —
-# a relative bound (2→8-busy-core silicon efficiency) AND an absolute one
-# (per-core seconds for the fixed calibration kernel at 2 busy cores; this
-# host delivers ~1.1-1.2 s healthy and 2.4-10 s in degradation windows, and
-# a UNIFORMLY slow window can read efficiency ≈ 1.0 while being 9x slow —
-# the ratio alone cannot detect it, hence the absolute bound).
-HEALTH_WAIT_SEC = int(os.environ.get("SPARK_GRAFT_HEALTH_WAIT_SEC", "1500"))
-HEALTHY_EFF = float(os.environ.get("SPARK_GRAFT_HEALTHY_EFF", "0.65"))
-HEALTHY_PERCORE_SEC = float(
-    os.environ.get("SPARK_GRAFT_HEALTHY_PERCORE_SEC", "1.8")
-)
 
 HEADLINE = [
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_substring",
-    "connected_components",
-    "dedup_jaccard",
-    "agg_lineitem",
-    "join_revenue_by_nation",
-    "sessionize",
-    "topk_per_group",
-    "text_quality",
-    "token_count",
-    "knn_cosine",
+    "dedup_minhash_lsh", "dedup_simhash", "dedup_substring", "connected_components",
+    "dedup_jaccard", "agg_lineitem", "join_revenue_by_nation", "sessionize",
+    "topk_per_group", "text_quality", "token_count", "knn_cosine",
 ]
 
-_SCALING_SNIPPET = r"""
-import json, os, sys, time
-sys.path.insert(0, "{repo}")
-from outcite_duplicate_detecting_spark.session import get_spark
-from outcite_duplicate_detecting_spark.plans.pipeline import PipelineConfig, dedup_pipeline
 
-cores = int(sys.argv[1]); corpus = sys.argv[2]; workdir = sys.argv[3]
-# shuffle partitions are sized by the DATA (so tasks fit in memory), not by
-# the leg's core count, and are identical across legs — the same physical
-# plan at two parallelism levels, exactly what the N vs 4N comparison
-# means on a cluster. cores*2 at the small leg would mean ~500 MB sort
-# tasks in the concurrent detector joins (observed GC death at 800k docs).
-# Memory scales WITH the leg's executor count: the north rule compares N
-# vs 4N EXECUTORS, and an executor is a fixed (cores, memory) container —
-# 4N executors own 4x the aggregate memory. A flat heap across legs would
-# starve the big leg's concurrent tasks (execution memory divides by
-# running task count) and measure the starvation, not the dataflow.
-# 12 GB/core keeps the SMALL leg at exactly the 24 GB every previous
-# round used (so the baseline leg cannot be accused of sandbagging) and
-# gives the big leg its fair 4x aggregate.
-# SPARK_GRAFT_FLAT_HEAP_GB pins BOTH legs to one heap — the round-5
-# control run that isolates the heap profile's contribution to the ratio
-# (advisor ask; the r4 in-session A/B already measured heap as neutral).
-flat = os.environ.get("SPARK_GRAFT_FLAT_HEAP_GB")
-mem_per_core_gb = int(os.environ.get("SPARK_GRAFT_MEM_PER_CORE_GB", "12"))
-heap_gb = int(flat) if flat else cores * mem_per_core_gb
-spark = get_spark(cores=cores, app_name=f"bench-scaling-{{cores}}",
-                  shuffle_partitions=32,
-                  extra_conf={{"spark.driver.memory": f"{{heap_gb}}g"}})
-pages = spark.read.parquet(corpus)
-t0 = time.time()
-# durable-checkpoint mode for the timed legs — measured FASTER than light
-# mode at 800k docs on BOTH core counts (light 8c 790s vs ckpt ~400s;
-# light 2c 1264s vs ckpt 1026s, r4 probes): light mode's in-memory
-# localCheckpoint blocks (texts + fat signature arrays) starve execution
-# memory in the concurrent detector joins, while parquet checkpoints are
-# compressed, evictable, and re-readable with column pruning
-out = dedup_pipeline(spark, pages, PipelineConfig(), workdir=workdir, run_id=f"bench{{cores}}")
-n = out.count()
-dup_rows = out.where(out.is_duplicate).count()
-wall = time.time() - t0
-print(json.dumps({{"cores": cores, "wall_sec": wall, "docs": n,
-                   "docs_per_sec": n / wall, "dup_rows": dup_rows}}))
-spark.stop()
-"""
+def plan_legs(cpus: int, ram_bytes: int) -> tuple[int, int, float, float] | None:
+    """(n_small, n_big, heap_small_gb, heap_big_gb) for the N-vs-4N legs, or
+    None when the host has too few CPUs for a 4N leg.
+
+    N is capped at 2: on a 32-CPU host 16+ busy cores paid a ~1.24× turbo /
+    memory-bandwidth penalty on identical numpy tasks, so 2-vs-8 measured
+    the pipeline rather than the silicon. The heap scales with the leg,
+    because 4N executors own 4× the memory of N; per core it is 12 GB, or
+    less so that the big leg's heap stays within 60% of physical RAM."""
+    n_small = max(1, min(2, cpus // 4))
+    n_big = 4 * n_small
+    if n_big > cpus:
+        return None
+    per_core_gb = min(12.0, 0.6 * ram_bytes / 2**30 / n_big)
+    return n_small, n_big, round(per_core_gb * n_small, 2), round(per_core_gb * n_big, 2)
 
 
-_HEADLINE_SNIPPET = r"""
+def run_child(code: str, args: list, cpus: list[int], timeout: int) -> tuple[dict | None, str]:
+    """Run ``code`` in a fresh python pinned with taskset to ``cpus`` (as-is
+    without taskset). Returns (last JSON line of its stdout or None, stderr).
+    A fresh process per run: pyspark keeps its gateway JVM alive until the
+    python process exits, and a lingering JVM would pollute the next run."""
+    argv = [sys.executable, "-c", code, REPO, *map(str, args)]
+    if shutil.which("taskset"):
+        argv = ["taskset", "-c", ",".join(map(str, cpus))] + argv
+    proc = subprocess.run(argv, capture_output=True, text=True, timeout=timeout)
+    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
+    return (json.loads(lines[-1]) if lines else None), proc.stderr
+
+
+_HEADLINE_CHILD = r"""
 import json, sys, time
-sys.path.insert(0, "{repo}")
+sys.path.insert(0, sys.argv[1])
 import __spark_entry__ as entrymod
 from outcite_duplicate_detecting_spark.session import get_spark
 
-spark = get_spark(cores={cpus}, app_name="bench-headline")
+spark = get_spark(cores=int(sys.argv[2]), app_name="bench-headline")
 qs = entrymod.queries()
-# two full passes, min per query: the host's sporadic ~2x slow state
-# (minutes-long) otherwise writes itself into single-sample timings
-# (observed: the same query 12.4s vs 24.4s across runs); the second pass
-# also factors out one-time JVM/codegen warmup
-timings = {{}}
+# two passes, min per query: the second pass factors out one-time JVM and
+# codegen warm-up, and the min drops a sample hit by a slow host window
+timings = {}
 for _pass in range(2):
-    for name in {headline!r}:
+    for name in sys.argv[4:]:
         t0 = time.time()
-        qs[name](spark, {sf_dir!r}).write.format("noop").mode("overwrite").save()
+        qs[name](spark, sys.argv[3]).write.format("noop").mode("overwrite").save()
         dt = round(time.time() - t0, 3)
         if name not in timings or dt < timings[name]:
             timings[name] = dt
-print("HEADLINE " + json.dumps(timings))
+print(json.dumps(timings))
 """
 
-
-def time_headline_queries() -> dict[str, float]:
-    # subprocess: pyspark keeps its gateway JVM alive until the python
-    # process exits, and a lingering JVM would pollute the scaling runs
-    repo = os.path.dirname(os.path.abspath(__file__))
-    snippet = _HEADLINE_SNIPPET.format(
-        repo=repo, cpus=CPUS, headline=HEADLINE, sf_dir=SF_DIR
-    )
-    proc = subprocess.run(
-        [sys.executable, "-c", snippet], capture_output=True, text=True, timeout=3600
-    )
-    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("HEADLINE ")]
-    if not lines:
-        raise RuntimeError(f"headline run failed:\n{proc.stderr[-2000:]}")
-    return json.loads(lines[-1][len("HEADLINE "):])
-
-
-_CAL_SNIPPET = r"""
-import time
+_CAL_CHILD = r"""
+import json, time
 import numpy as np
 h = np.arange(5_000_000, dtype=np.uint64)
 t0 = time.time()
 for _ in range(20):
     z = (h ^ (h >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
     z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-print(time.time() - t0)
+print(json.dumps({"sec": time.time() - t0}))
 """
 
 
-def calibrate_host(n_small: int, n_big: int, rounds: int = 3) -> dict:
-    """Measure the SILICON's own per-core throughput at n_small vs n_big
-    busy cores with a fixed numpy integer-mix kernel (no Spark, no JVM).
-
-    Recorded alongside the scaling result so the gate number carries its
-    own context: this host exhibits hypervisor-level degradation windows
-    (measured in-session: the identical single-core task ranging 3.6s →
-    30s, and 8-busy-core per-core throughput dropping to ~0.6× of
-    2-busy) — when ``silicon_efficiency`` is itself far below 1.0, the
-    pipeline's recorded efficiency is bounded by the machine, not the
-    dataflow. ``rounds=1`` is the cheap per-attempt variant attached to
-    every leg attempt (each wall time carries its own host context)."""
+def calibrate_host(n_small: int, n_big: int) -> dict:
+    """Per-core seconds of a fixed numpy kernel with n_small, then n_big
+    copies busy, one on each of the first n CPUs of the affinity set.
+    ``silicon_efficiency`` (per-core throughput at n_big relative to
+    n_small) is the N-vs-4N scaling the machine itself can show."""
+    cpus = sorted(os.sched_getaffinity(0))
 
     def run_busy(n: int) -> float:
-        procs = [
-            subprocess.Popen(
-                (["taskset", "-c", str(i)] if shutil.which("taskset") else [])
-                + [sys.executable, "-c", _CAL_SNIPPET],
-                stdout=subprocess.PIPE, text=True,
-            )
-            for i in range(n)
-        ]
-        times = [float(p.communicate(timeout=600)[0].strip()) for p in procs]
-        return sum(times) / len(times)
+        with ThreadPoolExecutor(n) as pool:
+            runs = list(pool.map(lambda cpu: run_child(_CAL_CHILD, [], [cpu], 600), cpus[:n]))
+        failed = [err for res, err in runs if res is None]
+        if failed:
+            raise RuntimeError(f"calibration probe failed:\n{failed[0][-2000:]}")
+        return sum(res["sec"] for res, _err in runs) / n
 
-    # min over INTERLEAVED small/big rounds — same healthiest-sample
-    # philosophy as the legs (single samples vary 3-10x in bad windows),
-    # and interleaving means a minutes-long degradation window cannot
-    # cover one level's whole block while missing the other's (which
-    # would skew the ratio in either direction)
-    smalls, bigs = [], []
-    for _ in range(rounds):
-        smalls.append(run_busy(n_small))
-        bigs.append(run_busy(n_big))
-    t_small, t_big = min(smalls), min(bigs)
-    return {
-        "percore_sec_at_small": round(t_small, 2),
-        "percore_sec_at_big": round(t_big, 2),
-        "silicon_efficiency": round(t_small / t_big, 3) if t_big else None,
-    }
+    t_small, t_big = run_busy(n_small), run_busy(n_big)
+    return {"percore_sec_at_small": round(t_small, 2), "percore_sec_at_big": round(t_big, 2),
+            "silicon_efficiency": round(t_small / t_big, 3)}
 
 
 def wait_for_healthy_host(n_small: int, n_big: int) -> dict:
-    """Bounded wait for a healthy host window before the timed legs start.
+    """Wait, at most 120 s, for a probe that is healthy on both axes.
 
-    The r4 postmortem: the driver's graded run landed entirely inside a
-    hypervisor degradation window (silicon 0.098-0.592) where NO workload
-    could demonstrate 2→8-core scaling — the recorded 0.424 measured the
-    hypervisor, not the dataflow. This gate polls the fixed numpy
-    calibration kernel (never the pipeline — an honest-but-slow dataflow
-    cannot buy itself a wait) until one probe is healthy on BOTH axes:
-    silicon_efficiency >= HEALTHY_EFF (relative: the ratio the gate needs
-    the silicon to be capable of) and percore_sec_at_small <=
-    HEALTHY_PERCORE_SEC (absolute: a uniformly-9x-slow window reads
-    efficiency ~1.0 but flips state mid-leg). Bounded by HEALTH_WAIT_SEC;
-    on timeout the run proceeds anyway with started_degraded=true. Every
-    probe is logged and returned for the bench JSON."""
+    Hosts have had windows where every core, or every busy core, is several
+    times slower; timings from such a window measure the host, not the
+    pipeline. Healthy: silicon efficiency >= 0.65 AND per-core time at
+    n_small <= 1.8 s (a uniformly slow window reads efficiency ~1.0). On
+    timeout the run goes on with started_degraded=true."""
+    max_wait_sec, sleep_sec = 120, 20
+    healthy_eff, healthy_percore_sec = 0.65, 1.8
     t0 = time.time()
     probes = []
     while True:
-        cal = calibrate_host(n_small, n_big, rounds=1)
+        cal = calibrate_host(n_small, n_big)
         probes.append({**cal, "t_offset_sec": round(time.time() - t0, 1)})
-        healthy = (
-            (cal["silicon_efficiency"] or 0.0) >= HEALTHY_EFF
-            and cal["percore_sec_at_small"] <= HEALTHY_PERCORE_SEC
-        )
-        if healthy or time.time() - t0 > HEALTH_WAIT_SEC:
-            return {
-                "waited_sec": round(time.time() - t0, 1),
-                "started_degraded": not healthy,
-                "probes": probes,
-            }
-        time.sleep(45)
+        healthy = (cal["silicon_efficiency"] >= healthy_eff
+                   and cal["percore_sec_at_small"] <= healthy_percore_sec)
+        if healthy or time.time() - t0 + sleep_sec > max_wait_sec:
+            return {"waited_sec": round(time.time() - t0, 1),
+                    "started_degraded": not healthy, "probes": probes}
+        time.sleep(sleep_sec)
 
 
-def run_scaling() -> dict:
-    from outcite_duplicate_detecting_spark.session import get_spark
+_LEG_CHILD = r"""
+import json, sys, time
+sys.path.insert(0, sys.argv[1])
+from outcite_duplicate_detecting_spark.session import get_spark
+from outcite_duplicate_detecting_spark.plans.pipeline import PipelineConfig, dedup_pipeline
 
+cores, corpus, workdir, heap = int(sys.argv[2]), sys.argv[3], sys.argv[4], sys.argv[5]
+# shuffle partitions are sized by the data and identical across legs: the
+# same physical plan at two parallelism levels
+spark = get_spark(cores=cores, app_name=f"bench-leg-{cores}", shuffle_partitions=32,
+                  extra_conf={"spark.driver.memory": heap})
+pages = spark.read.parquet(corpus)
+t0 = time.time()
+out = dedup_pipeline(spark, pages, PipelineConfig(), workdir=workdir, run_id=f"bench{cores}")
+n = out.count()
+dup_rows = out.where(out.is_duplicate).count()
+wall = time.time() - t0
+print(json.dumps({"cores": cores, "wall_sec": round(wall, 2), "docs": n,
+                  "docs_per_sec": round(n / wall, 1), "dup_rows": dup_rows}))
+spark.stop()
+"""
+
+
+_GEN_CHILD = r"""
+import sys
+sys.path.insert(0, sys.argv[1])
+from outcite_duplicate_detecting_spark.session import get_spark
+from outcite_duplicate_detecting_spark.sources.bench_corpus import generate_bench_pages
+
+cpus, docs, out = int(sys.argv[2]), int(sys.argv[3]), sys.argv[4]
+generate_bench_pages(get_spark(cores=cpus, app_name="bench-gen"), docs,
+                     parts=max(cpus * 2, 64)).write.parquet(out)
+print("{}")
+"""
+
+
+def stage_walls(workdir: str) -> dict[str, float]:
+    """{stage: wall_s} from the stage manifests a pipeline run leaves."""
+    walls = {}
+    for mf in sorted(glob.glob(os.path.join(workdir, "*", "manifest.json"))):
+        with open(mf) as f:
+            walls[os.path.basename(os.path.dirname(mf))] = json.load(f)["wall_s"]
+    return walls
+
+
+def run_scaling(cpus: int, legs: tuple[int, int, float, float]) -> dict:
+    n_small, n_big, heap_small_gb, heap_big_gb = legs
+    affinity = sorted(os.sched_getaffinity(0))
     tmp = tempfile.mkdtemp(prefix="bench_corpus_")
     corpus_dir = os.path.join(tmp, "pages")
-    gen = get_spark(cores=CPUS, app_name="bench-gen")
-    from outcite_duplicate_detecting_spark.sources.bench_corpus import generate_bench_pages
+    res, err = run_child(_GEN_CHILD, [cpus, BENCH_DOCS, corpus_dir], affinity, 3600)
+    if res is None:
+        raise RuntimeError(f"corpus generation failed:\n{err[-2000:]}")
+    # every attempt in run order: the leg's JSON plus its per-stage walls,
+    # or the tail of its stderr
+    attempts: dict[int, list[dict]] = {n_small: [], n_big: []}
 
-    generate_bench_pages(gen, BENCH_DOCS, parts=max(CPUS * 2, 64)).write.mode(
-        "overwrite"
-    ).parquet(corpus_dir)
-    gen.stop()
-
-    snippet = _SCALING_SNIPPET.format(repo=os.path.dirname(os.path.abspath(__file__)))
-    n_small, n_big = SCALE_N, SCALE_N * 4
-    results = {}
-    # big leg first (warms the corpus page cache for the long small leg);
-    # best-of-2 per leg: this host exhibits a sporadic ~2x slow state
-    # (hypervisor-level, uncorrelated with the workload — identical
-    # back-to-back runs measured 46s vs 118s), so a single sample can
-    # misstate either leg. Min-of-2 recovers the machine's true speed.
-    os.makedirs("BENCH", exist_ok=True)
-    attempts: dict[int, list[dict]] = {n_big: [], n_small: []}
-    errors: dict[int, list[str]] = {n_big: [], n_small: []}
-    counters: dict[int, int] = {n_big: 0, n_small: 0}
-
-    def run_leg(cores: int) -> None:
-        attempt = counters[cores]
-        counters[cores] += 1
-        # per-attempt silicon calibration (1 round, ~5s): EVERY wall time
-        # carries its own host context — the r4 postmortem showed a leg can
-        # sit entirely inside a degradation window that before/mid/after
-        # brackets straddle without seeing
-        cal = calibrate_host(n_small, n_big, rounds=1)
-        # flush dirty pages before each timed leg: accumulated unsynced
-        # writes from earlier runs throttle this leg's shuffle/checkpoint
-        # writes (measured 74s vs 127s for an identical run with ~30 GB of
-        # stale dirty /tmp pages)
-        os.sync()
+    def run_leg(cores: int) -> bool:
+        attempt = len(attempts[cores])
         workdir = os.path.join(tmp, f"work{cores}_{attempt}")
-        # pin the whole JVM+python-worker tree to exactly `cores` CPUs —
-        # the core-bounded-executor emulation the north rule's N vs 4N
-        # cluster comparison implies (see module docstring)
-        cmd = ["taskset", "-c", f"0-{cores - 1}", sys.executable, "-c",
-               snippet, str(cores), corpus_dir, workdir]
-        if shutil.which("taskset") is None:
-            cmd = cmd[3:]
-        proc = subprocess.run(cmd, capture_output=True, text=True, timeout=5400)
-        # full leg stderr lands in BENCH/leg_<cores>_<attempt>.log
+        # flush dirty pages first: unsynced writes of earlier legs otherwise
+        # throttle this leg's shuffle and checkpoint writes
+        os.sync()
+        heap = f"{int((heap_small_gb if cores == n_small else heap_big_gb) * 1024)}m"
+        res, err = run_child(_LEG_CHILD, [cores, corpus_dir, workdir, heap],
+                             affinity[:cores], 5400)
         with open(f"BENCH/leg_{cores}_{attempt}.log", "w") as f:
-            f.write(proc.stderr[-200_000:])
-        line = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
-        if not line:
-            errors[cores].append(proc.stderr[-2000:])
-            return
-        attempts[cores].append({**json.loads(line[-1]), "cal": cal})
+            f.write(err[-200_000:])
+        attempts[cores].append(
+            {**res, "stages": stage_walls(workdir)} if res else {"error": err[-2000:]}
+        )
         shutil.rmtree(workdir, ignore_errors=True)
+        return res is not None
 
-    def best(cores: int) -> dict:
-        return min(attempts[cores], key=lambda a: a["wall_sec"])
-
-    # bounded pre-run health gate (see wait_for_healthy_host): don't START
-    # the graded legs inside a known-degraded window; fully logged
-    health_wait = wait_for_healthy_host(n_small, n_big)
-    # silicon calibration brackets the legs: if the machine itself can't
-    # scale 2→8 busy cores during the run, the recorded ratio carries
-    # that context (see calibrate_host)
-    cal_before = calibrate_host(n_small, n_big)
-    # INTERLEAVED best-of-2: the host exhibits a sporadic ~2x slow state
-    # lasting minutes (hypervisor-level; identical back-to-back runs
-    # measured 46s vs 118s). Back-to-back attempts of one leg can BOTH
-    # land inside a slow window (observed: recorded efficiency 0.739 on
-    # code that measured 0.859 an hour earlier); alternating legs makes a
-    # single window hit at most one attempt of each.
     for cores in (n_big, n_small, n_big, n_small):
-        run_leg(cores)
-    for cores in (n_big, n_small):
-        # failed attempts get one replacement; wildly disagreeing samples
-        # (>1.3x spread = slow-state signature) get one tie-break attempt
-        if len(attempts[cores]) < 2:
-            run_leg(cores)
-        walls = [a["wall_sec"] for a in attempts[cores]]
-        if len(walls) >= 2 and max(walls) / min(walls) > 1.3 and counters[cores] < 3:
-            run_leg(cores)
-        if not attempts[cores]:
-            raise RuntimeError(
-                f"scaling run cores={cores} failed every attempt:\n"
-                + "\n---\n".join(errors[cores])
-            )
-    # sickness retry, now per-attempt-driven: if a leg's BEST attempt was
-    # measured under a degraded-silicon window (its own calibration
-    # < 0.55), that wall time is untrustworthy in the direction that
-    # hurts the gate most on the 8-core leg (bandwidth contention). Grant
-    # up to 2 extra interleaved attempt-pairs while any leg's best sample
-    # is sick — bounded (≤5 attempts/leg), every attempt + calibration
-    # logged in `attempts`; the trigger is the fixed numpy kernel, never
-    # the pipeline's own numbers, so an honest-but-slow dataflow cannot
-    # earn retries.
-    for _extra in range(2):
-        sick = [
-            cores
-            for cores in (n_big, n_small)
-            if (best(cores)["cal"]["silicon_efficiency"] or 1.0) < 0.55
-        ]
-        if not sick:
-            break
-        for cores in (n_big, n_small):
-            if cores in sick and counters[cores] < 5:
-                run_leg(cores)
-    for cores in (n_big, n_small):
-        results[cores] = best(cores)
+        run_leg(cores) or run_leg(cores)
     shutil.rmtree(tmp, ignore_errors=True)
 
-    cal_after = calibrate_host(n_small, n_big)
-    speedup = results[n_big]["docs_per_sec"] / results[n_small]["docs_per_sec"]
-    efficiency = speedup / 4
-    return {
-        "health_wait": health_wait,
-        "host_calibration_before": cal_before,
-        "host_calibration_after": cal_after,
-        "docs": BENCH_DOCS,
-        "cores_small": n_small,
-        "cores_big": n_big,
-        "pinned": shutil.which("taskset") is not None,
-        "flat_heap_gb": os.environ.get("SPARK_GRAFT_FLAT_HEAP_GB"),
-        # full per-leg attempt list (interleaved run order big,small,big,
-        # small + tie-breaks + sick-window retries), each with its own
-        # silicon calibration, so the min-of-attempts provenance of the
-        # gate number is machine-checkable from the JSON alone
-        "attempts": {
-            str(cores): [
-                {
-                    "wall_sec": round(a["wall_sec"], 2),
-                    "silicon_eff_at_attempt": a["cal"]["silicon_efficiency"],
-                }
-                for a in attempts[cores]
-            ]
-            for cores in (n_small, n_big)
-        },
-        "small_docs_per_sec": round(results[n_small]["docs_per_sec"], 1),
-        "big_docs_per_sec": round(results[n_big]["docs_per_sec"], 1),
-        "small_wall_sec": round(results[n_small]["wall_sec"], 2),
-        "big_wall_sec": round(results[n_big]["wall_sec"], 2),
-        "speedup_n_to_4n": round(speedup, 3),
-        "scaling_efficiency": round(efficiency, 3),
-    }
+    out = {"docs": BENCH_DOCS, "cores_small": n_small, "cores_big": n_big,
+           "heap_small_gb": heap_small_gb, "heap_big_gb": heap_big_gb,
+           "pinned": shutil.which("taskset") is not None,
+           "attempts": {str(c): attempts[c] for c in (n_small, n_big)}}
+    best = {c: min((a for a in attempts[c] if "wall_sec" in a),
+                   key=lambda a: a["wall_sec"], default=None) for c in (n_small, n_big)}
+    if None in best.values():
+        return {**out, "failed": [c for c, a in best.items() if a is None]}
+    for leg, c in (("small", n_small), ("big", n_big)):
+        out[f"{leg}_docs_per_sec"] = best[c]["docs_per_sec"]
+        out[f"{leg}_wall_sec"] = best[c]["wall_sec"]
+    speedup = best[n_big]["docs_per_sec"] / best[n_small]["docs_per_sec"]
+    return {**out, "speedup_n_to_4n": round(speedup, 3),
+            "scaling_efficiency": round(speedup / 4, 3)}
 
 
-def write_bench_md(timings: dict[str, float], scaling: dict | None) -> None:
-    os.makedirs("BENCH", exist_ok=True)
+def write_bench_md(out: dict) -> None:
     lines = [
         "# BENCH — measured numbers",
         "",
-        f"Headline queries at sf dir `{SF_DIR}` on local[{CPUS}] (noop sink, full",
-        "compute; two passes, min per query — see bench.py on the host's sporadic",
-        "slow state):",
+        f"Headline queries at `{SF_DIR}` on local[{out['cpus']}] (noop sink, full",
+        "compute; two passes, min per query):",
         "",
         "| query | sec |",
         "| --- | --- |",
+        *(f"| {k} | {v} |" for k, v in out["queries"].items()),
+        f"| **total** | **{out['value']}** |",
+        "",
+        "## The bench JSON (health gate probes, throughput legs)",
+        "",
+        "```json",
+        json.dumps(out, indent=1),
+        "```",
     ]
-    lines += [f"| {k} | {v} |" for k, v in timings.items()]
-    if scaling:
-        ns, nb = scaling["cores_small"], scaling["cores_big"]
-        pin = "pinned via taskset" if scaling["pinned"] else "UNPINNED (no taskset)"
-        lines += [
-            "",
-            "## Scaling (north rule: N vs 4N parallelism on identical input)",
-            "",
-            f"Full dedup pipeline (collapse → unified sign → MinHash+SimHash+substring",
-            f"joins → CC → expand, durable stage checkpoints ON — measured faster than",
-            "light mode at both core counts; see bench.py) over "
-            f"{scaling['docs']:,}",
-            f"deterministic synthetic pages. Each run is a fresh JVM {pin} to exactly",
-            "its core budget, with "
-            + (
-                f"a FLAT {scaling['flat_heap_gb']} GB heap on both legs (control run"
-                " isolating the heap profile's contribution)"
-                if scaling.get("flat_heap_gb")
-                else "heap scaled per executor (12 GB/core — the north"
-                " rule compares N vs 4N EXECUTORS, and 4N executors own 4x the"
-                " aggregate memory; a flat heap would starve the big leg's"
-                " concurrent tasks and measure starvation, not the dataflow)"
-            )
-            + ". This is the core-bounded-executor",
-            "emulation of an N vs 4N cluster (a pandas-UDF workload uses N JVM",
-            "threads + N python workers, so an unpinned small leg would silently",
-            "borrow up to 2N cores and cap the",
-            f"measurable speedup at ~2×). The {ns}-vs-{nb} pair is the least",
-            "silicon-confounded choice on this machine (16+ busy cores always pay a",
-            "~1.24× turbo/bandwidth penalty), and the live calibration below records",
-            "what the silicon actually delivered around the legs.",
-            "",
-            "Leg attempts are INTERLEAVED (big, small, big, small — one slow-state",
-            "window can then hit at most one attempt per leg) with an adaptive",
-            "tie-break attempt when a leg's two samples disagree by >1.3×, and up",
-            "to 2 bounded extra attempt-pairs while a leg's best sample carries a",
-            "degraded per-attempt silicon calibration (< 0.55 — the fixed numpy",
-            "kernel, independent of the pipeline; all attempts + their",
-            "calibrations are in the bench JSON `attempts` provenance).",
-            ""
-            + (
-                f" HEAP CONTROL RUN: flat {scaling['flat_heap_gb']} GB on BOTH legs."
-                if scaling.get("flat_heap_gb")
-                else ""
-            ),
-            "| parallelism | wall sec (best of attempts) | docs/sec |",
-            "| --- | --- | --- |",
-            f"| local[{ns}] pinned to {ns} CPUs | {scaling['small_wall_sec']} | {scaling['small_docs_per_sec']} |",
-            f"| local[{nb}] pinned to {nb} CPUs | {scaling['big_wall_sec']} | {scaling['big_docs_per_sec']} |",
-            "",
-            f"speedup {ns}→{nb}: **{scaling['speedup_n_to_4n']}×**, scaling efficiency "
-            f"(speedup/4): **{scaling['scaling_efficiency']}** (target ≥ 0.8)",
-            "",
-            "Host silicon calibration (same fixed numpy kernel per busy core —",
-            "`silicon_efficiency` = per-core throughput at 8 busy cores relative to",
-            "2; this host has hypervisor-level degradation windows where the value",
-            "drops to ~0.6, bounding ANY workload's measurable 2→8 scaling):",
-            "",
-            f"- before legs: {scaling['host_calibration_before']}",
-            f"- after legs: {scaling['host_calibration_after']}",
-            "",
-            "Pre-run health gate (bounded wait for a window where the SILICON can",
-            "demonstrate scaling — relative efficiency AND absolute per-core speed;",
-            "a uniformly-slow window reads efficiency ~1.0, hence both axes): waited "
-            f"{scaling['health_wait']['waited_sec']} s, started_degraded="
-            f"{scaling['health_wait']['started_degraded']} "
-            f"({len(scaling['health_wait']['probes'])} probes, all in the bench JSON).",
-        ]
     with open("BENCH/BASELINE.md", "w") as f:
         f.write("\n".join(lines) + "\n")
 
 
-def main() -> None:
-    # the headline timings grade round-over-round regressions, so they get
-    # the same pre-run health gate as the scaling legs (a degraded window
-    # inflates every query 2-9x and reads as a phantom regression); when
-    # the window is healthy the gate costs one ~5s probe. run_scaling's
-    # own gate then normally passes immediately.
-    headline_health = wait_for_healthy_host(2, 8)
-    timings = time_headline_queries()
-    scaling = None if SKIP_SCALING else run_scaling()
-    write_bench_md(timings, scaling)
+def main() -> int:
+    from outcite_duplicate_detecting_spark.session import physical_ram_bytes
+
+    affinity = sorted(os.sched_getaffinity(0))
+    cpus = len(affinity)
+    legs = plan_legs(cpus, physical_ram_bytes())
+    os.makedirs("BENCH", exist_ok=True)
+    # with fewer than 4 CPUs the gate probes 1 vs all CPUs
+    health = wait_for_healthy_host(*(legs[:2] if legs else (1, cpus)))
+    timings, err = run_child(_HEADLINE_CHILD, [cpus, SF_DIR, *HEADLINE], affinity, 3600)
+    if timings is None:
+        raise RuntimeError(f"headline run failed:\n{err[-2000:]}")
     out = {
-        "metric": "e2e_headline_queries",
-        "value": round(sum(timings.values()), 3),
-        "unit": "sec",
-        "queries": timings,
-        "sf": SF_DIR.rstrip("/").split("sf")[-1],
-        "headline_health_wait": {
-            "waited_sec": headline_health["waited_sec"],
-            "started_degraded": headline_health["started_degraded"],
-        },
+        "metric": "e2e_headline_queries", "value": round(sum(timings.values()), 3),
+        "unit": "sec", "queries": timings, "sf": SF_DIR.rstrip("/").split("sf")[-1],
+        "cpus": cpus, "headline_health_wait": health,
     }
-    if scaling:
-        out["throughput"] = scaling
-    print(json.dumps(out))
+    print(json.dumps(out), flush=True)
+    if legs is None:
+        out["throughput"] = {"skipped": f"{cpus} CPUs: a 4N-core leg needs at least 4"}
+    elif not SKIP_SCALING:
+        out["throughput"] = run_scaling(cpus, legs)
+    write_bench_md(out)
+    print(json.dumps(out), flush=True)
+    return 1 if "failed" in out.get("throughput", {}) else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -191,24 +191,12 @@ def connected_components(
     # pre-loop digest of the input — the first round's digest doubles as
     # the baseline (an already-converged input just takes its one
     # confirmation round, same as before; every other input saves a job)
-    import os
-    import time
-
-    timing = bool(os.environ.get("SPARK_GRAFT_STAGE_TIMING"))
     e = _normalize(edges, src, dst).localCheckpoint(eager=False)
     prev: tuple[int, int, int] | None = None
     star_exit = False
     for _round in range(max_iter):
-        t0 = time.time()
-        e2 = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        n, h1, h2, non_star, max_out = _digest(e2)
-        if timing:
-            print(
-                f"STAGE_TIMING cc_round_{_round} {time.time() - t0:.2f}s"
-                f" edges={n} non_star={non_star} max_out={max_out}",
-                flush=True,
-            )
-        e = e2
+        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
+        n, h1, h2, non_star, max_out = _digest(e)
         if non_star == 0 and max_out <= 1:
             star_exit = True
             break

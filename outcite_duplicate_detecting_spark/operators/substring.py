@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.partitioning import spread_small_input
-from .joins import band_candidate_pairs
+from .joins import PairGenResult, band_candidate_pairs
 from .signatures import add_all_signatures
 
 
@@ -111,22 +111,29 @@ def substring_pairs(
         .select("id", F.length("text").alias("n_chars"), "fingerprints")
         .localCheckpoint(eager=True)
     )
+    cands = min_fingerprint_candidates(fparr, cfg)
+    return containment_verify(cands.pairs, base, cfg.min_len), cands.drops
+
+
+def min_fingerprint_candidates(fparr: DataFrame, cfg: SubstringConfig) -> PairGenResult:
+    """Candidate pairs (id1, id2) and dropped fingerprints of the
+    min-fingerprint containment join over ``fparr`` =
+    (id, n_chars, fingerprints). The index side posts every fingerprint;
+    the query side posts one row per doc, its global-min fingerprint (see
+    the module docstring for the exactness argument). Docs shorter than
+    min_len can never be an inner, so they are pruned from the query side
+    before the join, not just at verification."""
     fps = fparr.select("id", F.explode("fingerprints").alias("fp"))
-    # query side: one posting per doc — its global-min fingerprint (see
-    # module docstring for the exactness argument). Docs shorter than
-    # min_len can never be an inner, so they are pruned here, before the
-    # join, not just at verification.
     minfp = (
         fparr.where(F.col("n_chars") >= cfg.min_len)
         .select("id", F.array_min("fingerprints").alias("fp"))
         .where(F.col("fp").isNotNull())
     )
-    cands = band_candidate_pairs(
+    return band_candidate_pairs(
         fps, key_cols=["fp"], id_col="id",
         max_bucket_size=cfg.max_fingerprint_df, probe_left=minfp,
         probe_unique=True,  # one min-fp posting per doc; verify dedups
     )
-    return containment_verify(cands.pairs, base, cfg.min_len), cands.drops
 
 
 def containment_verify(

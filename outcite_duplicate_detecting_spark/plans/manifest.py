@@ -1,4 +1,4 @@
-"""Stage checkpoints with per-partition lineage manifests (resumable runs).
+"""Stage checkpoints with lineage manifests (resumable runs).
 
 The reference tracks progress with per-document ES flags (has_*/processed_*,
 /root/reference/code/0_update_blockIDs.py:34-35,65-66) and per-patch commit
@@ -7,9 +7,8 @@ rows (the `processing` report table,
 stage checkpoint is:
 
     <workdir>/<stage>/data/            parquet output of the stage
-    <workdir>/<stage>/manifest.json    input fingerprint + config fingerprint
-    <workdir>/<stage>/partitions/      parquet: per-partition lineage rows
-                                       (partition_id, rows, stage, run_id)
+    <workdir>/<stage>/manifest.json    input + config fingerprints, stage,
+                                       run_id, rows, wall_s, completed_at
 
 ``run_stage`` recomputes only when the (input fingerprint, config
 fingerprint) pair changed; otherwise it reads the checkpoint back — which
@@ -30,20 +29,16 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 
-def _file_counters(data_dir: str) -> list[dict]:
-    """Per-output-file row counts straight from the parquet footers —
-    metadata-only, no Spark job. One output file ≈ one write partition, so
-    this carries the per-partition lineage the manifests promise at zero
-    compute cost."""
+def parquet_row_count(path: str) -> int:
+    """Row count straight from the parquet footers of a written directory —
+    metadata only, no Spark job."""
     import pyarrow.parquet as pq
 
-    rows = []
-    for i, name in enumerate(sorted(os.listdir(data_dir))):
-        if not name.endswith(".parquet"):
-            continue
-        md = pq.read_metadata(os.path.join(data_dir, name))
-        rows.append({"partition_id": i, "file": name, "rows": md.num_rows})
-    return rows
+    return sum(
+        pq.read_metadata(os.path.join(path, f)).num_rows
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    )
 
 
 def run_stage(
@@ -73,24 +68,21 @@ def run_stage(
     t0 = time.time()
     df = compute()
     df.write.mode("overwrite").parquet(data_dir)
-    if os.environ.get("SPARK_GRAFT_STAGE_TIMING"):
-        print(f"STAGE_TIMING {stage} {time.time() - t0:.2f}s", flush=True)
+    wall_s = time.time() - t0
     # drop operator-internal localCheckpoint blocks promptly: the stage's
     # parquet checkpoint supersedes them, and accumulated RDD blocks
     # (shingle/signature arrays) otherwise pressure the executor heap
     del df
     gc.collect()
     out = spark.read.parquet(data_dir)
-    counters = _file_counters(data_dir)
-    with open(os.path.join(stage_dir, "partitions.json"), "w") as f:
-        json.dump({"stage": stage, "run_id": run_id, "partitions": counters}, f)
     with open(mf_path, "w") as f:
         json.dump(
             {
                 **want,
                 "stage": stage,
                 "run_id": run_id,
-                "rows": sum(c["rows"] for c in counters),
+                "rows": parquet_row_count(data_dir),
+                "wall_s": round(wall_s, 3),
                 "completed_at": time.time(),
             },
             f,

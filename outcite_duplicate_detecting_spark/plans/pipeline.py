@@ -214,8 +214,7 @@ def dedup_pipeline(
         from ..operators.minhash import minhash_candidate_pairs, verify_jaccard
         from ..operators.signatures import add_all_signatures
         from ..operators.simhash import simhash_verified_pairs
-        from ..operators.substring import containment_verify
-        from ..operators.joins import band_candidate_pairs
+        from ..operators.substring import containment_verify, min_fingerprint_candidates
 
         def _sign() -> DataFrame:
             # n_chars rides along (bytes-cheap) so the substring stage can
@@ -257,32 +256,9 @@ def dedup_pipeline(
             return verified
 
         def _substring() -> DataFrame:
-            fps = signed.select(
-                F.col("rep_id").alias("id"), F.explode("fingerprints").alias("fp")
-            )
-            # asymmetric min-fp containment join (substring.py module
-            # docstring): the query side is ONE posting per doc — its
-            # global-min fingerprint — against the full winnow index.
-            # Collapses the join's left side ~(w+1)/2 ≈ 190× vs the former
-            # share-any-fingerprint self-join (75M × 75M postings at 400k
-            # docs — the pipeline's largest non-scaling cost in the r5
-            # profile) while the winnowing guarantee keeps candidate
-            # recall exact.
-            minfp = (
-                signed.where(F.col("n_chars") >= cfg.substring.min_len)
-                .select(
-                    F.col("rep_id").alias("id"),
-                    F.array_min("fingerprints").alias("fp"),
-                )
-                .where(F.col("fp").isNotNull())
-            )
-            cands = band_candidate_pairs(
-                fps,
-                key_cols=["fp"],
-                id_col="id",
-                max_bucket_size=cfg.substring.max_fingerprint_df,
-                probe_left=minfp,
-                probe_unique=True,  # one min-fp posting per doc; verify dedups
+            cands = min_fingerprint_candidates(
+                signed.select(F.col("rep_id").alias("id"), "n_chars", "fingerprints"),
+                cfg.substring,
             )
             # verify base reads straight off `collapsed` (the checkpoint /
             # materialized block), NOT `reps`: reps' repartition is a full

@@ -30,6 +30,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .manifest import parquet_row_count
+
 
 def build_duplicates_table(
     assignments: DataFrame,
@@ -167,7 +169,7 @@ def merge_upsert_parquet(
     else:
         result = updates
     result.write.mode("overwrite").parquet(staging)
-    n = _parquet_row_count(staging)
+    n = parquet_row_count(staging)
     if os.path.exists(target_path):
         shutil.rmtree(target_path)
     os.rename(staging, target_path)
@@ -184,19 +186,8 @@ def sql_update_copy_column(
     out = df.withColumn(dst_col, F.col(src_col))
     staging = f"{target_path}.__upd__{uuid.uuid4().hex[:8]}"
     out.write.mode("overwrite").parquet(staging)
-    n = _parquet_row_count(staging)
+    n = parquet_row_count(staging)
     shutil.rmtree(target_path)
     os.rename(staging, target_path)
     return n
 
-
-def _parquet_row_count(path: str) -> int:
-    """Row count straight from the parquet footers — metadata only, no
-    Spark job (the plans/manifest.py lineage-counter pattern)."""
-    import pyarrow.parquet as pq
-
-    return sum(
-        pq.read_metadata(os.path.join(path, f)).num_rows
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    )

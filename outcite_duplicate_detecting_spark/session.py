@@ -17,6 +17,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def local_cores(cores: int | str) -> int:
+    """Core count of ``local[cores]``: "*" is every CPU this process may run
+    on (its affinity set, which a cgroup or taskset can make smaller than
+    the machine)."""
+    return len(os.sched_getaffinity(0)) if cores == "*" else int(cores)
+
+
+def physical_ram_bytes() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
+def default_driver_memory(ram_bytes: int) -> str:
+    """60% of physical RAM, capped at 24g: the heap must fit beside the
+    python workers and the OS page cache on the machine it runs on."""
+    return f"{min(24 * 1024, int(0.6 * ram_bytes / 2**20))}m"
+
+
 def get_spark(
     cores: int | str | None = None,
     app_name: str = "outcite_duplicate_detecting_spark",
@@ -26,9 +43,10 @@ def get_spark(
     """Build (or fetch) a SparkSession.
 
     ``cores``: int for ``local[N]``, "*" for all, None → $SPARK_GRAFT_CPUS
-    or all cores. ``shuffle_partitions`` defaults to the core count — at
-    cluster scale this is instead sized from input bytes (see
-    plans/pipeline.py docstring).
+    or all cores. ``shuffle_partitions`` defaults to the core count (at
+    least 8) — at cluster scale this is instead sized from input bytes (see
+    plans/pipeline.py docstring). The driver heap is
+    $SPARK_GRAFT_DRIVER_MEM or ``default_driver_memory``.
     """
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -42,9 +60,11 @@ def get_spark(
         os.environ["PYTHONPATH"] = (
             f"{pkg_root}{os.pathsep}{existing}" if existing else pkg_root
         )
-    n_cores = os.cpu_count() or 8 if cores == "*" else int(cores)
     if shuffle_partitions is None:
-        shuffle_partitions = max(n_cores, 8)
+        shuffle_partitions = max(local_cores(cores), 8)
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(
+        physical_ram_bytes()
+    )
 
     builder = (
         SparkSession.builder.master(master)
@@ -60,7 +80,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         # aggressively reclaim dropped localCheckpoint/persist blocks: the
         # default 30min periodic cleaner GC lets dead RDD blocks accumulate

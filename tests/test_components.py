@@ -4,6 +4,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from outcite_duplicate_detecting_spark.operators import components
 from outcite_duplicate_detecting_spark.operators.components import connected_components
 
 
@@ -80,21 +81,26 @@ def test_cc_star_skew(spark):
     assert got[501] == 500
 
 
-def test_cc_star_forest_exits_in_one_round(spark, monkeypatch, capsys):
+def test_cc_star_forest_exits_in_one_round(spark, monkeypatch):
     """The star-forest early exit (components._digest non_star): an input
     that is already a star forest must converge after a SINGLE round — the
-    old digest-equality-only loop needed a second confirmation round. The
-    stage-timing lines are the observable round count."""
-    monkeypatch.setenv("SPARK_GRAFT_STAGE_TIMING", "1")
+    old digest-equality-only loop needed a second confirmation round. Each
+    round runs one digest, so the digest calls are the round count."""
+    digests = []
+
+    def counting_digest(e):
+        digests.append(real_digest(e))
+        return digests[-1]
+
+    real_digest = components._digest
+    monkeypatch.setattr(components, "_digest", counting_digest)
     edges = [(1, 0), (2, 0), (3, 0), (10, 9), (11, 9)]
     edf = spark.createDataFrame(edges, "src long, dst long")
     got = {r["id"]: r["component"] for r in connected_components(edf).collect()}
     assert got == {0: 0, 1: 0, 2: 0, 3: 0, 9: 9, 10: 9, 11: 9}
-    rounds = [
-        ln for ln in capsys.readouterr().out.splitlines() if "cc_round_" in ln
-    ]
-    assert len(rounds) == 1, rounds
-    assert "non_star=0" in rounds[0]
+    assert len(digests) == 1, digests
+    _n, _h1, _h2, non_star, _max_out = digests[0]
+    assert non_star == 0
 
 
 def test_cc_path_graph_no_premature_star_exit(spark):
