@@ -14,8 +14,9 @@ still leaves a parsable line), then the full line, which adds
    threads plus N python workers, so an unpinned local[N] borrows up to 2N
    cores. Legs run big, small, big, small (one slow host window then hits
    at most one attempt per leg); each leg reports its best attempt, and a
-   failed attempt gets one replacement. $SPARK_GRAFT_SKIP_SCALING=1 skips
-   the legs; so do fewer than 4 CPUs, with the reason recorded.
+   failed or timed-out attempt gets one replacement.
+   $SPARK_GRAFT_SKIP_SCALING=1 skips the legs; so do fewer than 4 CPUs,
+   with the reason recorded.
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ import glob
 import json
 import os
 import shutil
+import signal
 import subprocess
 import sys
 import tempfile
@@ -63,17 +65,46 @@ def plan_legs(cpus: int, ram_bytes: int) -> tuple[int, int, float, float] | None
     return n_small, n_big, round(per_core_gb * n_small, 2), round(per_core_gb * n_big, 2)
 
 
+# children still running, so a signal to bench.py can end their process groups
+_RUNNING: set[subprocess.Popen] = set()
+
+
+def _kill_group(proc: subprocess.Popen) -> None:
+    try:
+        os.killpg(proc.pid, signal.SIGKILL)
+    except ProcessLookupError:
+        pass
+
+
+def _stop_children(signum: int, _frame) -> None:
+    for proc in list(_RUNNING):
+        _kill_group(proc)
+    raise SystemExit(128 + signum)
+
+
 def run_child(code: str, args: list, cpus: list[int], timeout: int) -> tuple[dict | None, str]:
     """Run ``code`` in a fresh python pinned with taskset to ``cpus`` (as-is
     without taskset). Returns (last JSON line of its stdout or None, stderr).
     A fresh process per run: pyspark keeps its gateway JVM alive until the
-    python process exits, and a lingering JVM would pollute the next run."""
+    python process exits, and a lingering JVM would pollute the next run.
+    The child leads its own session, so a timeout kills its whole process
+    group (python, JVM, python workers) and returns None like a failure."""
     argv = [sys.executable, "-c", code, REPO, *map(str, args)]
     if shutil.which("taskset"):
         argv = ["taskset", "-c", ",".join(map(str, cpus))] + argv
-    proc = subprocess.run(argv, capture_output=True, text=True, timeout=timeout)
-    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
-    return (json.loads(lines[-1]) if lines else None), proc.stderr
+    proc = subprocess.Popen(argv, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
+                            text=True, start_new_session=True)
+    _RUNNING.add(proc)
+    try:
+        out, err = proc.communicate(timeout=timeout)
+    except subprocess.TimeoutExpired:
+        _kill_group(proc)
+        _out, err = proc.communicate()
+        return None, f"{err}\ntimed out after {timeout}s"
+    finally:
+        _RUNNING.discard(proc)
+    lines = [ln for ln in out.splitlines() if ln.startswith("{")]
+    return (json.loads(lines[-1]) if lines else None), err
 
 
 _HEADLINE_CHILD = r"""
@@ -271,6 +302,8 @@ def write_bench_md(out: dict) -> None:
 def main() -> int:
     from outcite_duplicate_detecting_spark.session import physical_ram_bytes
 
+    for sig in (signal.SIGTERM, signal.SIGINT):
+        signal.signal(sig, _stop_children)
     affinity = sorted(os.sched_getaffinity(0))
     cpus = len(affinity)
     legs = plan_legs(cpus, physical_ram_bytes())

@@ -15,21 +15,33 @@ operations:
 - large-star: every neighbor v > u links to m(u) = min(N(u) ∪ {u})
 - small-star: every neighbor v ≤ u (edges oriented big→small) links to m(u)
 
-Each round is two shuffles (groupBy min + join); ``localCheckpoint``
-truncates lineage per round so plans stay flat. Convergence = edge-set
-fixpoint, detected with a cheap order-insensitive digest
-(count + sum of per-edge hashes) instead of a full set comparison.
+Convergence (Kiveris et al., "Connected Components in MapReduce and
+Beyond"): both operators preserve connectivity and the node set, and the
+alternation reaches a fixpoint in O(log² n) rounds. That fixpoint is
+exactly a min-centred star forest (every other node has one edge, to its
+component's minimum); any other graph is changed by some operator. So the
+loop has one exit: the round's output is a star forest, i.e. no node is
+both a src and a dst and no src has two dsts. Edges run strictly
+big→small, so each centre is its component's minimum and the edges are
+the labels. ``max_iter`` only guards against a broken invariant.
+
+Degree contract: a node's whole neighbourhood is one large-star window
+partition, so one task buffers a node's full degree; hot nodes are not
+split. Inside the pipeline degree is bounded by the detectors' caps:
+every edge is a verified pair that shared a bucket of at most
+``max_bucket_size`` (``max_fingerprint_df``) members, so a node's degree
+is at most its bucket count times the cap.
 
 Driver-barrier budget: exactly ONE job per round. The round's
-``localCheckpoint`` is lazy (eager=False) and the digest aggregation is
-the action that materializes it — checkpoint and convergence check share
-a single job instead of running back-to-back (the serialized per-round
-driver time is what caps N→4N scaling on small graphs).
+``localCheckpoint`` (which keeps plans flat) is lazy and the digest
+aggregation is the action that materializes it, so checkpoint and
+convergence test share one job (serialized per-round driver time is what
+caps N→4N scaling on small graphs).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -47,11 +59,8 @@ def _id_col(df: DataFrame, name: str, alias: str):
 
 
 def _normalize(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    # NO distinct (r6): duplicate input edges are harmless — the star
-    # operators are multiplicity-insensitive (window minima) and round 0's
-    # small-star distinct dedups before the first digest — so deduping
-    # here was a full-edge-set exchange spent only to shrink round 0's
-    # input by the (typically tiny) duplicate factor.
+    # no distinct: the star operators are multiplicity-insensitive (window
+    # minima) and round 0's small-star distinct dedups before the digest
     e = edges.select(_id_col(edges, src, "src"), _id_col(edges, dst, "dst"))
     return e.where(F.col("src") != F.col("dst")).select(
         F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
@@ -73,8 +82,6 @@ def _large_star(e: DataFrame) -> DataFrame:
     # (big, small) orientation this operator already guarantees (m < dst
     # by construction), so a distinct here was a second exchange over the
     # identical key — dropped (one fewer shuffle per CC round).
-    from pyspark.sql import Window
-
     w = Window.partitionBy("src")
     return (
         _symmetric(e)
@@ -91,8 +98,6 @@ def _small_star(e: DataFrame) -> DataFrame:
     # two directed edges), so the whole operator is distinct → window →
     # explode → distinct instead of distinct → groupBy → join → union →
     # distinct.
-    from pyspark.sql import Window
-
     ed = e.select(
         F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
     ).distinct()
@@ -112,66 +117,29 @@ def _small_star(e: DataFrame) -> DataFrame:
     return linked.where(F.col("src") != F.col("dst")).distinct()
 
 
-def _digest(e: DataFrame) -> tuple[int, int, int, int, int]:
-    """(edge count, hash sum 1, hash sum 2, non_star, max_out) in ONE job.
+def _digest(e: DataFrame) -> tuple[int, int, int]:
+    """(edge count, non_star, max_out) in ONE job.
 
-    The first three are the order-insensitive set digest (count + two
-    modular hash sums; moduli keep the ANSI-mode sums far from long
-    overflow at any scale). ``non_star`` counts nodes that appear both as
-    a src and as a dst; ``max_out`` is the maximum src out-degree. Both
-    star operators emit edges strictly big→small, so the edge set is a
-    STAR FOREST iff non_star == 0 AND max_out <= 1 — non_star alone is
-    NOT sufficient: a src linking to two distinct centers has disjoint
-    src/dst sets but is not a star (e.g. the one-round image of the path
+    ``non_star`` counts nodes that appear both as a src and as a dst;
+    ``max_out`` is the maximum src out-degree. Both star operators emit
+    edges strictly big→small, so the edge set is a STAR FOREST iff
+    non_star == 0 AND max_out <= 1 — non_star alone is NOT sufficient: a
+    src linking to two distinct centers has disjoint src/dst sets but is
+    not a star (e.g. the one-round image of the path
     (1,3),(3,4),(4,5),(2,5) is {(3,1),(4,1),(3,2),(5,2)}: non_star = 0
-    yet node 3 links to centers 1 and 2, which must still merge). A star
-    forest is a fixpoint of both operators (each member's only neighbor
-    is its center, which is the component minimum, so large-star and
-    small-star re-emit the same edges), so the combined condition ends
-    the loop one full round earlier than waiting for two equal digests
-    (the digest comparison stays as the conservative fallback)."""
-    h = F.xxhash64("src", "dst")
-    zero = F.lit(0).cast("long")
-    u = e.select(
-        F.col("src").alias("x"),
-        F.lit(1).alias("es"),
-        F.pmod(h, F.lit(1_000_003)).alias("p1"),
-        F.pmod(h, F.lit(999_983)).alias("p2"),
-    ).unionByName(
-        e.select(
-            F.col("dst").alias("x"), F.lit(0).alias("es"),
-            zero.alias("p1"), zero.alias("p2"),
-        )
+    yet node 3 links to centers 1 and 2, which must still merge)."""
+    u = e.select(F.col("src").alias("x"), F.lit(1).alias("es")).unionByName(
+        e.select(F.col("dst").alias("x"), F.lit(0).alias("es"))
     )
     per_node = u.groupBy("x").agg(
-        F.sum("es").alias("n_src"),
-        F.count("*").alias("n_all"),
-        F.sum("p1").alias("s1"),
-        F.sum("p2").alias("s2"),
+        F.sum("es").alias("n_src"), F.count("*").alias("n_all")
     )
     row = per_node.agg(
         F.coalesce(F.sum("n_src"), F.lit(0)).alias("n"),
-        F.coalesce(F.sum("s1"), F.lit(0)).alias("h1"),
-        F.coalesce(F.sum("s2"), F.lit(0)).alias("h2"),
-        F.coalesce(
-            F.sum(
-                F.when(
-                    (F.col("n_src") > 0) & (F.col("n_all") > F.col("n_src")), 1
-                ).otherwise(0)
-            ),
-            F.lit(0),
-        ).alias("non_star"),
-        F.coalesce(
-            F.max(F.when(F.col("n_src") > 0, F.col("n_src"))), F.lit(0)
-        ).alias("max_out"),
+        F.count_if((F.col("n_src") > 0) & (F.col("n_all") > F.col("n_src"))).alias("non_star"),
+        F.coalesce(F.max("n_src"), F.lit(0)).alias("max_out"),
     ).collect()[0]
-    return (
-        int(row["n"]),
-        int(row["h1"]),
-        int(row["h2"]),
-        int(row["non_star"]),
-        int(row["max_out"]),
-    )
+    return int(row["n"]), int(row["non_star"]), int(row["max_out"])
 
 
 def connected_components(
@@ -185,24 +153,21 @@ def connected_components(
     """(id, component) — component = minimum node id of the component.
 
     ``nodes`` (optional, one column ``id_col``) adds isolated vertices,
-    which label themselves.
+    which label themselves; without it the nodes are the endpoints of the
+    input edges (self-loops dropped).
     """
     # lazy checkpoint + digest-as-materializer: one job per round. No
-    # pre-loop digest of the input — the first round's digest doubles as
-    # the baseline (an already-converged input just takes its one
-    # confirmation round, same as before; every other input saves a job)
-    e = _normalize(edges, src, dst).localCheckpoint(eager=False)
-    prev: tuple[int, int, int] | None = None
-    star_exit = False
+    # pre-loop digest of the input: an input that is already a star
+    # forest takes its one round and exits on that round's test
+    inp = _normalize(edges, src, dst).localCheckpoint(eager=False)
+    e = inp
     for _round in range(max_iter):
         e = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        n, h1, h2, non_star, max_out = _digest(e)
+        n, non_star, max_out = _digest(e)
+        # the only exit: a proven min-centred star forest, the fixpoint of
+        # the alternation (Kiveris et al.; module docstring)
         if non_star == 0 and max_out <= 1:
-            star_exit = True
             break
-        if (n, h1, h2) == prev:
-            break
-        prev = (n, h1, h2)
         # late rounds are shuffle-LATENCY-bound, not data-bound: once the
         # edge set is tiny, re-reading its checkpoint blocks with the full
         # partition fan-out just serializes task-launch overhead across
@@ -214,36 +179,16 @@ def connected_components(
     else:
         raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
-    if star_exit:
-        # e is a PROVEN star forest (non_star == 0 and max_out <= 1):
-        # every member appears exactly once as src with its center as
-        # dst, and centers/isolated nodes appear only as dst/never — so
-        # the labels are the edges themselves, no symmetric re-expansion
-        # + per-node min aggregation needed (two fewer exchanges in the
-        # final job). Only used on the proven exit; the digest-equality
-        # fallback keeps the generic reduction.
-        members = e.select(F.col("src").alias(id_col), F.col("dst").alias("component"))
-        if nodes is not None:
-            all_nodes = nodes.select(_id_col(nodes, id_col, id_col)).distinct()
-            return all_nodes.join(members, id_col, "left").select(
-                id_col, F.coalesce("component", F.col(id_col)).alias("component")
-            )
-        centers = e.select(
-            F.col("dst").alias(id_col), F.col("dst").alias("component")
-        ).distinct()
-        return members.unionByName(centers)
-    labels = (
-        _symmetric(e)
-        .groupBy("src")
-        .agg(F.min("dst").alias("component"))
-        .select(
-            F.col("src").alias(id_col),
-            F.least("component", "src").alias("component"),
+    # every member appears exactly once as src with its center (the
+    # component minimum) as dst; centers and isolated nodes label
+    # themselves through the coalesce
+    members = e.select(F.col("src").alias(id_col), F.col("dst").alias("component"))
+    if nodes is None:
+        all_nodes = inp.select(F.col("src").alias(id_col)).unionByName(
+            inp.select(F.col("dst").alias(id_col))
         )
+    else:
+        all_nodes = nodes.select(_id_col(nodes, id_col, id_col))
+    return all_nodes.distinct().join(members, id_col, "left").select(
+        id_col, F.coalesce("component", F.col(id_col)).alias("component")
     )
-    if nodes is not None:
-        all_nodes = nodes.select(_id_col(nodes, id_col, id_col)).distinct()
-        labels = all_nodes.join(labels, id_col, "left").select(
-            id_col, F.coalesce("component", F.col(id_col)).alias("component")
-        )
-    return labels

@@ -15,9 +15,13 @@ map to relational form:
 - rarest-first intersection → the join naturally intersects through the
   postings index; selectivity ordering is the optimizer's job,
 - size-stratified task grid (:125-135, 176-184) → the pruning predicate
-  size(A) ≤ size(B) (strict subsets: <, plus id tie-break on equal sets),
-- frequency cap on ubiquitous features → the same bucket-cap machinery as
-  every candidate join here (drop accounting).
+  size(A) ≤ size(B) (strict subsets: <, plus id tie-break on equal sets).
+
+``containment_pairs`` has no frequency cap and no drop accounting: the
+rarest-first probe keeps ubiquitous features off the sub side, but no
+superset-side posting is ever dropped, so a feature carried by k docs
+still joins each sub that probes it against all k. (The only cap in this
+module is ``lattice_pair_recall_with_drops``'s superset fan-in cap.)
 """
 
 from __future__ import annotations

@@ -61,7 +61,7 @@ def jaccard_pairs(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.8,
-    max_bucket_size: int | None = 25000,
+    max_bucket_size: int = 25000,
 ) -> DataFrame:
     """(id1, id2, inter_size, union_size) for all pairs with exact
     word-n-shingle Jaccard ≥ threshold; id1 < id2. See
@@ -79,7 +79,7 @@ def jaccard_pairs_with_drops(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.8,
-    max_bucket_size: int | None = 25000,
+    max_bucket_size: int = 25000,
 ) -> tuple[DataFrame, DataFrame]:
     """(pairs, dropped_shingles).
 
@@ -118,16 +118,11 @@ def jaccard_pairs_with_drops(
     # consumes the drops side.
     exh = ex.select("id", "sz", F.xxhash64("shingle").alias("h"))
     rows, _ = grouped_pairs(exh, ["h"], "id", payload=["sz"], max_bucket_size=max_bucket_size)
-    if max_bucket_size is not None:
-        drops = (
-            ex.groupBy("shingle")
-            .agg(F.count("*").alias("bucket_size"))
-            .where(F.col("bucket_size") > max_bucket_size)
-        )
-    else:
-        drops = (
-            ex.select("shingle").limit(0).withColumn("bucket_size", F.lit(0).cast("long"))
-        )
+    drops = (
+        ex.groupBy("shingle")
+        .agg(F.count("*").alias("bucket_size"))
+        .where(F.col("bucket_size") > max_bucket_size)
+    )
     inter = rows.groupBy(
         "id1", "id2", F.col("m1.sz").alias("sz1"), F.col("m2.sz").alias("sz2")
     ).agg(F.count("*").alias("inter_size"))

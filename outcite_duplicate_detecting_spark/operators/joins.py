@@ -21,6 +21,9 @@ Skew handling is the cap plus bounded row memory:
 
 The member list of an over-cap key is still built before the cap filter
 drops it, so a single key must fit in one aggregation buffer.
+
+``join_pair_sides`` is the one join-back of candidate pairs to a per-id
+table (MinHash shingle sets, substring texts) for verification.
 """
 
 from __future__ import annotations
@@ -41,8 +44,9 @@ def grouped_pairs(
     postings: DataFrame,
     key_cols: list[str],
     id_col: str = "id",
+    *,
+    max_bucket_size: int,
     payload: list[str] | None = None,
-    max_bucket_size: int | None = None,
     probe_left: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """(pair rows, drops) for every two members sharing a key.
@@ -76,16 +80,10 @@ def grouped_pairs(
         F.sort_array(F.collect_list(member)).alias("members"),
         F.count("*").alias("bucket_size"),
     )
-    if max_bucket_size is not None:
-        drops = grouped.where(F.col("bucket_size") > max_bucket_size).select(
-            *key_cols, "bucket_size"
-        )
-        kept = grouped.where(F.col("bucket_size") <= max_bucket_size)
-    else:
-        drops = (
-            keyed.select(*key_cols).limit(0).withColumn("bucket_size", F.lit(0).cast("long"))
-        )
-        kept = grouped
+    drops = grouped.where(F.col("bucket_size") > max_bucket_size).select(
+        *key_cols, "bucket_size"
+    )
+    kept = grouped.where(F.col("bucket_size") <= max_bucket_size)
 
     mid = (lambda c: F.col(c)[id_col]) if payload else F.col
     if probe_left is not None:
@@ -117,7 +115,8 @@ def band_candidate_pairs(
     postings: DataFrame,
     key_cols: list[str],
     id_col: str = "id",
-    max_bucket_size: int | None = None,
+    *,
+    max_bucket_size: int,
     probe_left: DataFrame | None = None,
     probe_unique: bool = False,
 ) -> PairGenResult:
@@ -142,3 +141,22 @@ def band_candidate_pairs(
     # byte-small/CPU-heavy shuffles is protected by the session's
     # adaptive.coalescePartitions.minPartitionSize setting (session.py).
     return PairGenResult(pairs.distinct(), drops)
+
+
+def join_pair_sides(
+    pairs: DataFrame, table: DataFrame, id_col: str, value_col: str, names: tuple[str, str]
+) -> DataFrame:
+    """``pairs`` (id1, id2, ...) plus ``table``'s ``value_col`` for each
+    side, named ``names``. The table is first pruned to ids that occur in
+    some pair: candidates are sparse, the id list is bytes per candidate
+    (broadcastable — AQE picks), and the values of non-candidates stay
+    out of both join-back shuffles."""
+    ids = (
+        pairs.select(F.col("id1").alias(id_col))
+        .unionByName(pairs.select(F.col("id2").alias(id_col)))
+        .distinct()
+    )
+    table = table.join(ids, id_col, "left_semi")
+    v1 = table.select(F.col(id_col).alias("id1"), F.col(value_col).alias(names[0]))
+    v2 = table.select(F.col(id_col).alias("id2"), F.col(value_col).alias(names[1]))
+    return pairs.join(v1, "id1").join(v2, "id2")

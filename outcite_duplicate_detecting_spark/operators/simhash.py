@@ -61,7 +61,7 @@ class SimHashConfig:
     # plain 16-bit banding is exact only to k ≤ 3 and leaves the 4..7 tail
     # probabilistic.
     multi_probe: bool = False
-    max_bucket_size: int | None = 25000
+    max_bucket_size: int = 25000
     # "wordhash" (default): the shared signing pass — FNV-hash each word
     # once, derive gram hashes from word hashes by vector arithmetic
     # (functions/hashing.hash_shingles_from_word_hashes, ~45× cheaper than
@@ -104,34 +104,27 @@ def add_simhash(df: DataFrame, cfg: SimHashConfig, text_col: str = "text") -> Da
     return df.withColumn("simhash", sign_text(F.col(text_col)))
 
 
-def block_postings(
-    df: DataFrame,
-    cfg: SimHashConfig,
-    id_col: str = "id",
-    sig_col: str = "simhash",
-    keep_sig: bool = False,
+def _block_postings(
+    df: DataFrame, cfg: SimHashConfig, flips: bool, id_col: str, sig_col: str
 ) -> DataFrame:
-    """(id, band_key): band_key = the band's bits of the signature with the
-    band INDEX folded into the high bits (value | band_idx << w) — one flat
-    long key per posting instead of a two-column (band_idx, band_key) join
-    key; grouping semantics are identical since the fold is injective.
-
-    Pure JVM bit ops: shiftrightunsigned + mask — no UDF. ``keep_sig``
-    carries the full signature through (8 bytes/posting) so the band join
-    can verify Hamming distance in-join (``simhash_pairs`` fused path)."""
+    """(id, sig, band_key): band_key = the band's bits of the signature with
+    the band INDEX folded into the high bits (value | band_idx << w) — one
+    flat long key per posting instead of a two-column (band_idx, band_key)
+    join key; grouping semantics are identical since the fold is injective.
+    ``flips`` also posts every single-bit flip of each band value (the
+    multi-probe query side). Pure JVM bit ops — no UDF. The full signature
+    rides along (8 bytes/posting) so the band join verifies Hamming
+    distance in-join."""
     w = cfg.bits_per_band
     mask = (1 << w) - 1
-    bands = F.array(
-        *[
-            F.shiftrightunsigned(F.col(sig_col), bi * w)
-            .bitwiseAND(F.lit(mask))
-            .bitwiseOR(F.lit(bi << w))
-            for bi in range(cfg.bands)
-        ]
-    )
-    extra = [F.col(sig_col).alias("sig")] if keep_sig else []
+    keys = []
+    for bi in range(cfg.bands):
+        block = F.shiftrightunsigned(F.col(sig_col), bi * w).bitwiseAND(F.lit(mask))
+        variants = [block] + ([block.bitwiseXOR(F.lit(1 << j)) for j in range(w)] if flips else [])
+        keys += [v.bitwiseOR(F.lit(bi << w)) for v in variants]
     return df.select(
-        F.col(id_col).alias("id"), *extra, F.explode(bands).alias("band_key")
+        F.col(id_col).alias("id"), F.col(sig_col).alias("sig"),
+        F.explode(F.array(*keys)).alias("band_key"),
     )
 
 
@@ -190,12 +183,8 @@ def simhash_verified_pairs(
     (XOR is symmetric), and the generator's least/greatest orientation plus
     the final distinct keep exactly one instance of every pair.
     """
-    postings = block_postings(signed, cfg, id_col=id_col, sig_col=sig_col, keep_sig=True)
-    probe = (
-        probe_block_postings(signed, cfg, id_col=id_col, sig_col=sig_col, keep_sig=True)
-        if cfg.multi_probe
-        else None
-    )
+    postings = _block_postings(signed, cfg, False, id_col, sig_col)
+    probe = _block_postings(signed, cfg, True, id_col, sig_col) if cfg.multi_probe else None
     rows, drops = grouped_pairs(
         postings, ["band_key"], "id", payload=["sig"],
         max_bucket_size=cfg.max_bucket_size, probe_left=probe,
@@ -204,26 +193,3 @@ def simhash_verified_pairs(
         "id1", "id2", hamming(F.col("m1.sig"), F.col("m2.sig")).cast("int").alias("hamming_dist")
     ).where(F.col("hamming_dist") <= cfg.hamming_k)
     return hits.distinct(), drops
-
-
-def probe_block_postings(
-    df: DataFrame,
-    cfg: SimHashConfig,
-    id_col: str = "id",
-    sig_col: str = "simhash",
-    keep_sig: bool = False,
-) -> DataFrame:
-    """Query-side postings for 1-bit multi-probe: every band value plus its
-    ``bits_per_band`` single-bit flips — pure JVM bit ops; band_idx folds
-    into the key exactly as in ``block_postings``."""
-    w = cfg.bits_per_band
-    mask = (1 << w) - 1
-    entries = []
-    for bi in range(cfg.bands):
-        block = F.shiftrightunsigned(F.col(sig_col), bi * w).bitwiseAND(F.lit(mask))
-        variants = [block] + [block.bitwiseXOR(F.lit(1 << j)) for j in range(w)]
-        entries += [v.bitwiseOR(F.lit(bi << w)) for v in variants]
-    extra = [F.col(sig_col).alias("sig")] if keep_sig else []
-    return df.select(
-        F.col(id_col).alias("id"), *extra, F.explode(F.array(*entries)).alias("band_key")
-    )

@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.partitioning import spread_small_input
-from .joins import PairGenResult, band_candidate_pairs
+from .joins import PairGenResult, band_candidate_pairs, join_pair_sides
 from .signatures import add_all_signatures
 
 
@@ -65,7 +65,7 @@ class SubstringConfig:
     # (With the min-fp query side the join is linear per bucket — index
     # rows × the handful of min-fp queries landing there — so the cap is a
     # boilerplate guard, not a quadratic guard.)
-    max_fingerprint_df: int | None = 25000
+    max_fingerprint_df: int = 25000
 
     @property
     def guarantee_t(self) -> int:
@@ -149,18 +149,9 @@ def containment_verify(
     of the (fat) text columns; the r5 profile showed the former pandas-UDF
     verify as the pipeline's fattest stage (458 task-seconds at 400k docs,
     dominated by shipping both full texts per pair out to Python). The
-    text table is pruned to candidate participants first — candidates are
-    sparse, the id list broadcasts, and non-candidate texts stay out of
-    both verify-join shuffles (the verify_jaccard pattern)."""
-    cand_ids = (
-        pairs.select(F.col("id1").alias("id"))
-        .unionByName(pairs.select(F.col("id2").alias("id")))
-        .distinct()
-    )
-    base = base.join(cand_ids, "id", "left_semi")
-    t1 = base.select(F.col("id").alias("id1"), F.col("text").alias("t1"))
-    t2 = base.select(F.col("id").alias("id2"), F.col("text").alias("t2"))
-    paired = pairs.join(t1, "id1").join(t2, "id2")
+    join-back (``join_pair_sides``) prunes the text table to candidate ids
+    first, so non-candidate texts stay out of both verify-join shuffles."""
+    paired = join_pair_sides(pairs, base, "id", "text", ("t1", "t2"))
 
     directed = paired.select(
         F.explode(

@@ -1,5 +1,7 @@
 """Connected components vs a Python union-find oracle."""
 
+import itertools
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -82,10 +84,10 @@ def test_cc_star_skew(spark):
 
 
 def test_cc_star_forest_exits_in_one_round(spark, monkeypatch):
-    """The star-forest early exit (components._digest non_star): an input
-    that is already a star forest must converge after a SINGLE round — the
-    old digest-equality-only loop needed a second confirmation round. Each
-    round runs one digest, so the digest calls are the round count."""
+    """The star-forest exit (components._digest non_star, max_out): an
+    input that is already a star forest must converge after a SINGLE
+    round, with no confirmation round. Each round runs one digest, so the
+    digest calls are the round count."""
     digests = []
 
     def counting_digest(e):
@@ -99,7 +101,7 @@ def test_cc_star_forest_exits_in_one_round(spark, monkeypatch):
     got = {r["id"]: r["component"] for r in connected_components(edf).collect()}
     assert got == {0: 0, 1: 0, 2: 0, 3: 0, 9: 9, 10: 9, 11: 9}
     assert len(digests) == 1, digests
-    _n, _h1, _h2, non_star, _max_out = digests[0]
+    _n, non_star, _max_out = digests[0]
     assert non_star == 0
 
 
@@ -132,3 +134,31 @@ def test_cc_two_center_fuzz_vs_union_find(spark):
     edf = spark.createDataFrame([(int(a), int(b)) for a, b in edges], "src long, dst long")
     got = {r["id"]: r["component"] for r in connected_components(edf).collect()}
     assert got == want
+
+
+@pytest.mark.parametrize("n", [4, 5])
+def test_cc_every_small_graph_vs_union_find(spark, n):
+    """Every big→small oriented edge set on n nodes (2^C(n,2) graphs: 64
+    for n=4, 1024 for n=5), each relabelled onto its own id range, in ONE
+    call with ``nodes`` so isolated nodes are labelled too. The star-forest
+    test is the loop's only exit, so every graph must reach it with
+    union-find labels."""
+    pairs = [(b, a) for a, b in itertools.combinations(range(n), 2)]
+    edges, nodes = [], []
+    for mask in range(2 ** len(pairs)):
+        base = mask * n
+        nodes += [base + i for i in range(n)]
+        edges += [(base + b, base + a) for k, (b, a) in enumerate(pairs) if mask >> k & 1]
+    want = oracle_labels(edges, nodes)
+    edf = spark.createDataFrame(edges, "src long, dst long")
+    ndf = spark.createDataFrame([(x,) for x in nodes], "id long")
+    got = {r["id"]: r["component"] for r in connected_components(edf, nodes=ndf).collect()}
+    assert got == want
+
+
+def test_cc_max_iter_raises(spark):
+    """The round budget is the safety net: a 64-node chain is no star
+    forest after one round, so max_iter=1 must raise, not return labels."""
+    edf = spark.createDataFrame([(i, i + 1) for i in range(63)], "src long, dst long")
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components(edf, max_iter=1)

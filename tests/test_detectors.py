@@ -292,11 +292,13 @@ def test_jaccard_pairs_hot_shingle_cap(spark):
     got = {(r["id1"], r["id2"]) for r in pairs.collect()}
     assert got == {(100, 101)}  # stop-shingle bucket generated no pairs
 
-    # uncapped: identical output when no bucket exceeds the cap
+    # no bucket over the cap: exactly the brute-force all-pairs result
     capped, drops2 = jaccard_pairs_with_drops(df, threshold=0.5, max_bucket_size=25000)
-    uncapped, _ = jaccard_pairs_with_drops(df, threshold=0.5, max_bucket_size=None)
     assert drops2.count() == 0
-    assert sorted(map(tuple, capped.collect())) == sorted(map(tuple, uncapped.collect()))
+    import pandas as pd
+
+    want = brute_jaccard_pairs(pd.DataFrame(rows, columns=["doc_id", "text"]), threshold=0.5)
+    assert {(r["id1"], r["id2"]) for r in capped.collect()} == want
 
 
 def test_simhash_multiprobe_exact_k7_at_16bit(spark, corpus):
